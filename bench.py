@@ -42,7 +42,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else 0.1  # never crash before the JSON line
 
     from kafka_stream_sorter_spark.registry import QUERIES
-    from kafka_stream_sorter_spark.session import get_spark
+    from kafka_stream_sorter_spark.session import codegen_compiles, get_spark
 
     # Machine calibration: this box is a shared VM whose effective CPU speed
     # has been observed to swing 4-8x between runs of identical code. A
@@ -101,7 +101,13 @@ def main() -> None:
     # failures, keep going.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    # Janino compiles per run of each query (a py4j counter read, no Spark
+    # job). Repeats should compile nothing: a query whose repeats keep
+    # compiling builds new generated source on every call (e.g. a .limit()
+    # inside a codegen stage) and shows up here by name.
+    compiles: dict[str, list[int]] = {}
     for name in sorted(QUERIES):
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         try:
             df = QUERIES[name](spark, sf_dir)
@@ -109,6 +115,7 @@ def main() -> None:
             timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as exc:  # noqa: BLE001 - survive, report, continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+        compiles[name] = [codegen_compiles(spark) - c0]
 
     # Noise adjudication (r8 verdict stretch #7): single-shot timings on
     # this shared VM carry documented 3-4x noise, and re-running only the
@@ -127,12 +134,14 @@ def main() -> None:
     repeat_walls: dict[str, list[float]] = {k: [v] for k, v in timings.items()}
 
     def _rerun(name: str) -> None:
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         try:
             QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception:  # noqa: BLE001 - keep the numbers we have
             return
         repeat_walls[name].append(time.perf_counter() - t0)
+        compiles[name].append(codegen_compiles(spark) - c0)
 
     queries_min: dict[str, float] = dict(timings)
     for name in sorted(queries_min, key=queries_min.get, reverse=True):
@@ -277,6 +286,8 @@ def main() -> None:
         for k, v in sorted(repeat_walls.items())
         if len(v) > 1 and v[-1] > 0
     }
+    # full-record-only: compiles per run, aligned with query_repeat_walls
+    out["codegen_compiles"] = {k: v for k, v in sorted(compiles.items()) if k in repeat_walls}
     out["load_avg_at_start"] = load_avg
     out["calib_matmul_sec"] = calib_sec
     # Provenance: the core count this run actually used (master
@@ -322,7 +333,8 @@ def main() -> None:
     digest = {
         k: v
         for k, v in out.items()
-        if k not in ("queries", "queries_min", "query_repeat_walls", "decay_ratio")
+        if k not in ("queries", "queries_min", "query_repeat_walls", "decay_ratio",
+                     "codegen_compiles")
     }
     digest["full_record"] = full_name
     if errors:  # n_errors stays exact; messages may be elided for size

@@ -2,65 +2,22 @@
 
 Registry order consumed by registry.py: queries changed this round
 first, then oldest-newest-green first (driver prefix = first 50).
-Derived from CORRECTNESS_r*.json through round 16.
+Derived from CORRECTNESS_r*.json through round 17.
 """
 
 from __future__ import annotations
 
-LATEST_ROUND = 16
-CHANGED: list[str] = ['csv_wire_roundtrip', 'dedup_connected_groups', 'dedup_jaccard', 'dedup_minhash_groups', 'dedup_minhash_lsh', 'dedup_minhash_sig', 'dedup_ngram_jaccard', 'dedup_simhash', 'doc_fingerprint', 'keyed_fanout', 'keyed_fanout_name', 'keyed_fanout_pair', 'keyed_fanout_score', 'keyed_fanout_ts', 'keyed_fanout_unique', 'keyed_fanout_url', 'sort_low_cardinality', 'stream_cdc_upsert', 'stream_dedup_keys', 'stream_session_window', 'stream_sorted_drain', 'stream_stateful_user_stats', 'stream_static_join', 'stream_stream_interval_join', 'stream_topk', 'stream_window_sliding', 'stream_window_tumbling', 'text_bpe_tokens', 'text_langid', 'text_pii_scrub', 'text_quality', 'text_repetition', 'text_token_freq', 'text_tokens', 'udtf_tokenize']
+LATEST_ROUND = 17
+CHANGED: list[str] = ['keyed_fanout', 'keyed_fanout_name', 'keyed_fanout_pair', 'keyed_fanout_score', 'keyed_fanout_ts', 'keyed_fanout_unique', 'keyed_fanout_url']
 
 PRIORITY: list[str] = [
-    'csv_wire_roundtrip',  # newest green: r15
-    'dedup_connected_groups',  # newest green: r16
-    'dedup_jaccard',  # newest green: r16
-    'dedup_minhash_groups',  # newest green: r16
-    'dedup_minhash_lsh',  # newest green: r16
-    'dedup_minhash_sig',  # newest green: r16
-    'dedup_ngram_jaccard',  # newest green: r16
-    'dedup_simhash',  # newest green: r16
-    'doc_fingerprint',  # newest green: r14
-    'keyed_fanout',  # newest green: r16
-    'keyed_fanout_name',  # newest green: r16
-    'keyed_fanout_pair',  # newest green: r16
-    'keyed_fanout_score',  # newest green: r16
-    'keyed_fanout_ts',  # newest green: r16
-    'keyed_fanout_unique',  # newest green: r16
-    'keyed_fanout_url',  # newest green: r16
-    'sort_low_cardinality',  # newest green: r15
-    'stream_cdc_upsert',  # newest green: r15
-    'stream_dedup_keys',  # newest green: r15
-    'stream_session_window',  # newest green: r14
-    'stream_sorted_drain',  # newest green: r14
-    'stream_stateful_user_stats',  # newest green: r15
-    'stream_static_join',  # newest green: r15
-    'stream_stream_interval_join',  # newest green: r16
-    'stream_topk',  # newest green: r14
-    'stream_window_sliding',  # newest green: r14
-    'stream_window_tumbling',  # newest green: r14
-    'text_bpe_tokens',  # newest green: r14
-    'text_langid',  # newest green: r14
-    'text_pii_scrub',  # newest green: r14
-    'text_quality',  # newest green: r14
-    'text_repetition',  # newest green: r14
-    'text_token_freq',  # newest green: r14
-    'text_tokens',  # newest green: r14
-    'udtf_tokenize',  # newest green: r15
-    'text_chunk_windows',  # newest green: r14
-    'pipeline_quality_dedup_split',  # newest green: r14
-    'csv_file_roundtrip',  # newest green: r14
-    'jsonl_file_roundtrip',  # newest green: r14
-    'dedup_exact',  # newest green: r14
-    'window_analytic',  # newest green: r14
-    'agg_quantiles',  # newest green: r14
-    'agg_approx_distinct',  # newest green: r14
-    'agg_grouping_sets',  # newest green: r14
-    'join_left_outer',  # newest green: r14
-    'join_full_outer',  # newest green: r14
-    'join_null_safe',  # newest green: r14
-    'sort_numeric',  # newest green: r14
-    'sort_lexicographic',  # newest green: r14
-    'topk',  # newest green: r15
+    'keyed_fanout',  # newest green: r17
+    'keyed_fanout_name',  # newest green: r17
+    'keyed_fanout_pair',  # newest green: r17
+    'keyed_fanout_score',  # newest green: r17
+    'keyed_fanout_ts',  # newest green: r17
+    'keyed_fanout_unique',  # newest green: r17
+    'keyed_fanout_url',  # newest green: r17
     'sort_multikey_nulls',  # newest green: r15
     'sample_hash_split',  # newest green: r15
     'sample_stratified',  # newest green: r15
@@ -136,4 +93,47 @@ PRIORITY: list[str] = [
     'ann_bruteforce',  # newest green: r16
     'ann_vectorized',  # newest green: r16
     'ann_ivf_blocked',  # newest green: r16
+    'csv_wire_roundtrip',  # newest green: r17
+    'dedup_connected_groups',  # newest green: r17
+    'dedup_jaccard',  # newest green: r17
+    'dedup_minhash_groups',  # newest green: r17
+    'dedup_minhash_lsh',  # newest green: r17
+    'dedup_minhash_sig',  # newest green: r17
+    'dedup_ngram_jaccard',  # newest green: r17
+    'dedup_simhash',  # newest green: r17
+    'doc_fingerprint',  # newest green: r17
+    'sort_low_cardinality',  # newest green: r17
+    'stream_cdc_upsert',  # newest green: r17
+    'stream_dedup_keys',  # newest green: r17
+    'stream_session_window',  # newest green: r17
+    'stream_sorted_drain',  # newest green: r17
+    'stream_stateful_user_stats',  # newest green: r17
+    'stream_static_join',  # newest green: r17
+    'stream_stream_interval_join',  # newest green: r17
+    'stream_topk',  # newest green: r17
+    'stream_window_sliding',  # newest green: r17
+    'stream_window_tumbling',  # newest green: r17
+    'text_bpe_tokens',  # newest green: r17
+    'text_langid',  # newest green: r17
+    'text_pii_scrub',  # newest green: r17
+    'text_quality',  # newest green: r17
+    'text_repetition',  # newest green: r17
+    'text_token_freq',  # newest green: r17
+    'text_tokens',  # newest green: r17
+    'udtf_tokenize',  # newest green: r17
+    'text_chunk_windows',  # newest green: r17
+    'pipeline_quality_dedup_split',  # newest green: r17
+    'csv_file_roundtrip',  # newest green: r17
+    'jsonl_file_roundtrip',  # newest green: r17
+    'dedup_exact',  # newest green: r17
+    'window_analytic',  # newest green: r17
+    'agg_quantiles',  # newest green: r17
+    'agg_approx_distinct',  # newest green: r17
+    'agg_grouping_sets',  # newest green: r17
+    'join_left_outer',  # newest green: r17
+    'join_full_outer',  # newest green: r17
+    'join_null_safe',  # newest green: r17
+    'sort_numeric',  # newest green: r17
+    'sort_lexicographic',  # newest green: r17
+    'topk',  # newest green: r17
 ]

@@ -149,9 +149,9 @@ def cmd_validate(args) -> None:
     spark = _session(args)
     src = _read_records(spark, args.infile, args.format)
     out = _read_records(spark, args.out, args.format)
-    assert_sorted(out, args.key)
-    assert_count_conserved(src, out)
-    print(f"[validate:{args.key}] OK — ordered and count-conserved ({out.count()} rows)")
+    n = assert_sorted(out, args.key)
+    assert_count_conserved(src, out, result_rows=n)
+    print(f"[validate:{args.key}] OK — ordered and count-conserved ({n} rows)")
 
 
 def build_parser() -> argparse.ArgumentParser:

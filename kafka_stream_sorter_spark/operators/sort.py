@@ -1347,6 +1347,23 @@ def _weighted_bounds(pairs: list, n_buckets: int) -> list:
     return bounds[: n_buckets - 1]
 
 
+def _smallest_kt(df: DataFrame, n: int) -> list:
+    """The (at most) ``n`` rows of ``df`` with the smallest ``kt``, as Rows
+    in Spark's ascending order: one job, at most ``n`` rows to the driver.
+
+    ORDER BY + LIMIT below an aggregate plans as TakeOrderedAndProject's
+    shuffle path: a bounded top-n heap per partition, merged in one task
+    and gathered into one array row. At the plan root Spark would merge
+    every partition's heap on the driver instead, so a table of many
+    small partitions would ship its whole sample there. And no LIMIT sits
+    in a codegen stage: a LocalLimit names its counter after a JVM-global
+    id (``_limit_counter_<id>``), so every call would generate new source
+    and compile new classes. ``sort_array`` fixes the gathered order with
+    Spark's own ordering."""
+    rows = F.sort_array(F.collect_list(F.struct(*df.columns)))
+    return df.orderBy("kt").limit(n).agg(rows.alias("rows")).collect()[0]["rows"]
+
+
 def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -> DataFrame:
     """Attach the explicit global rank (1-based) under ORDER BY keys.
 
@@ -1464,12 +1481,13 @@ def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -
     # dropping null candidates only biases bucket sizing, not order) —
     # filtered driver-side so truncation detection sees the raw count.
     cap = _gp_sample_cap()
-    collected = _key_sample(GP_SAMPLE_MOD).limit(cap).orderBy("kt").collect()
+    collected = _smallest_kt(_key_sample(GP_SAMPLE_MOD), cap)
     if len(collected) >= cap:
-        # The limit truncated. A bare limit keeps whichever rows reach the
-        # GlobalLimit reducer first — the FIRST-SCHEDULED scan partitions,
-        # which on key-clustered input (time-ordered logs, sorted
-        # compactions — the normal 100 TB layout) are the LOWEST keys: the
+        # The sample reached the cap, so it may be truncated — and a
+        # truncated sample is key-biased: the top-k keeps the LOWEST keys
+        # (a bare limit would keep the first-scheduled scan partitions,
+        # the same lowest keys on key-clustered input — time-ordered logs,
+        # sorted compactions, the normal 100 TB layout). Either way the
         # bounds would underrepresent the rest of the key range and pile
         # it into giant buckets, serializing the window stage (measured at
         # 50M: skew 366× ideal, one task holding 9% of the table —
@@ -1497,26 +1515,24 @@ def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -
         # old raw-row guard-limit existed for (one heavy key carrying the
         # whole sample past 8× cap) compresses to ONE aggregate row
         # instead of silently re-entering layout-dependent truncation
-        # (r8 ADVICE item 1). The trailing limit survives as a pure
+        # (r8 ADVICE item 1). The trailing top-k limit survives as a pure
         # driver-OOM backstop; if it ever fires, stats say so
         # (resample_truncated) instead of nothing surfacing it.
-        agg_rows = (
+        agg_rows = _smallest_kt(
             _key_sample(GP_SAMPLE_MOD * extra)
             .groupBy("kt")
-            .agg(F.count(F.lit(1)).alias("w"))
-            .limit(4 * cap)
-            .orderBy("kt")
-            .collect()
+            .agg(F.count(F.lit(1)).alias("w")),
+            4 * cap,
         )
         resample_truncated = len(agg_rows) >= 4 * cap
         if resample_truncated:
             # Unconditional — production callers never pass `stats`, so
-            # without this a firing backstop (bounds once again a layout-
-            # dependent subset) would be invisible (r9 ADVICE item 1).
+            # without this a firing backstop (bounds once again a key-
+            # biased subset) would be invisible (r9 ADVICE item 1).
             _log.warning(
                 "with_global_position: resample driver-OOM backstop fired "
                 "(%d aggregates >= 4x cap %d, mod %d) — boundary sample is "
-                "limit-truncated and may be layout-biased; positions stay "
+                "truncated to the lowest key tuples; positions stay "
                 "exact but bucket balance is not guaranteed",
                 len(agg_rows), cap, GP_SAMPLE_MOD * extra,
             )

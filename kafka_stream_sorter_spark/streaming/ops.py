@@ -78,19 +78,20 @@ def _stream_shuffle(spark):
         else:
             spark.conf.unset(key)
 
-#: (path, mtime, size) → parquet footer schema. The schema batch-read in
-#: stream_events costs a file listing + footer fetch per CALL (~0.1-0.2 s
-#: measured in the r17 drain decomposition, scripts/
+#: path → ((mtime, size[, part-file stats]), parquet footer schema). The
+#: schema batch-read in stream_events costs a file listing + footer fetch
+#: per CALL (~0.1-0.2 s measured in the r17 drain decomposition, scripts/
 #: probe_stream_drain_decomp.py) and every one of the 11 streaming
 #: queries pays it; the schema is pure file METADATA — memoizing it is
-#: not result caching (no query data is persisted), and the mtime/size
-#: key invalidates the entry whenever the driver regenerates fixtures.
+#: not result caching (no query data is persisted). One entry per path:
+#: a stat mismatch (the driver regenerated fixtures) re-reads the footer
+#: and overwrites the entry, so rewrites never accumulate stale keys.
 _SCHEMA_MEMO: dict = {}
 
 
 def _source_schema(spark, path: str):
     try:
-        key = (path, os.path.getmtime(path), os.path.getsize(path))
+        key = (os.path.getmtime(path), os.path.getsize(path))
         if os.path.isdir(path):
             # A directory's mtime/size change only on entry add/remove/
             # rename — an in-place rewrite of a part file (same name, new
@@ -108,9 +109,10 @@ def _source_schema(spark, path: str):
             )
     except OSError:
         return spark.read.parquet(path).schema  # let Spark raise its error
-    if key not in _SCHEMA_MEMO:
-        _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
-    return _SCHEMA_MEMO[key]
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is None or hit[0] != key:
+        hit = _SCHEMA_MEMO[path] = (key, spark.read.parquet(path).schema)
+    return hit[1]
 
 
 def stream_events(spark, sf_dir: str) -> DataFrame:
@@ -124,7 +126,7 @@ def stream_events(spark, sf_dir: str) -> DataFrame:
     ``ts`` arrives as, ``normalize_timestamps`` — the SAME function the
     batch path uses — converts it to TimestampType, so batch and stream can
     never disagree on time units. The batch read costs one footer fetch at
-    plan time (memoized per (path, mtime, size) — _SCHEMA_MEMO); no data
+    plan time (memoized per path, keyed by its file stats — _SCHEMA_MEMO); no data
     is scanned."""
     from kafka_stream_sorter_spark.sources.parquet import (
         normalize_timestamps,

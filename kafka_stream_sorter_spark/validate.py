@@ -41,6 +41,14 @@ def count_violations(
       exchange emits partitions in key order). Use for in-memory results
       where scrambled-but-disjoint runs would be a real bug.
     """
+    return _order_check(df, *keys, ascending=ascending, allow_run_merge=allow_run_merge)[0]
+
+
+def _order_check(
+    df: DataFrame, *keys: str, ascending: bool, allow_run_merge: bool
+) -> tuple[int, int]:
+    """:func:`count_violations` and the number of rows it checked, from
+    the same single job."""
     # Capture the order the DataFrame actually produces: mono ids are
     # (partition_id << 33) + in-partition offset, and a range-partitioned
     # sort emits partitions in key order — so ascending (pid, mono id) ==
@@ -69,6 +77,9 @@ def count_violations(
     # in-partition collision would merely merge two runs into a stricter
     # adjacency check. Single-job evaluation also removes the
     # mono-id/pid re-evaluation hazard the persist existed to prevent.
+    # The same groupBy counts each run's rows, so a caller that also needs
+    # the row count (cli validate's conservation check) gets it without
+    # another scan.
     run_id = (
         F.xxhash64(F.input_file_name())
         if allow_run_merge
@@ -91,12 +102,14 @@ def count_violations(
         .groupBy("_pid", "_file")
         .agg(
             F.sum("_bad").alias("n_bad"),
+            F.count(F.lit(1)).alias("n_rows"),
             F.min_by("k", "_pos").alias("first_k"),
             F.max_by("k", "_pos").alias("last_k"),
         )
         .collect()
     )
     within = sum(r["n_bad"] for r in bounds)
+    rows = sum(r["n_rows"] for r in bounds)
     # allow_run_merge=True: boundary pairs compared in RANGE order — sorted
     # by (first key, last key): the last-key tiebreak puts runs that START
     # equal but END later after the ones that end at the shared value (a
@@ -119,24 +132,30 @@ def count_violations(
         lo, hi = tuple(left["last_k"]), tuple(right["first_k"])
         if (lo > hi) if ascending else (lo < hi):
             cross += 1
-    return within + cross
+    return within + cross, rows
 
 
 def assert_sorted(
     df: DataFrame, *keys: str, ascending: bool = True, allow_run_merge: bool = True
-) -> None:
+) -> int:
     """Raise unless ``df`` is sorted — by default under the run-merge
     contract (internally-sorted, range-disjoint runs; see
     :func:`count_violations`). Pass ``allow_run_merge=False`` to demand the
-    produced row order itself be globally ascending."""
-    n = count_violations(df, *keys, ascending=ascending, allow_run_merge=allow_run_merge)
+    produced row order itself be globally ascending. Returns the number of
+    rows checked, counted by the same job."""
+    n, rows = _order_check(df, *keys, ascending=ascending, allow_run_merge=allow_run_merge)
     if n:
         raise AssertionError(f"ordering violated for keys {keys}: {n} adjacent inversions")
+    return rows
 
 
-def assert_count_conserved(source: DataFrame, result: DataFrame) -> None:
+def assert_count_conserved(
+    source: DataFrame, result: DataFrame, result_rows: int | None = None
+) -> None:
     """No dropped/duplicated rows end-to-end — the check the reference
-    lacks entirely (SURVEY.md §5)."""
-    ns, nr = source.count(), result.count()
+    lacks entirely (SURVEY.md §5). ``result_rows``, when the caller already
+    counted ``result`` (:func:`assert_sorted` returns it), saves a job."""
+    ns = source.count()
+    nr = result.count() if result_rows is None else result_rows
     if ns != nr:
         raise AssertionError(f"row count not conserved: source={ns} result={nr}")

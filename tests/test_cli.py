@@ -73,3 +73,36 @@ def test_ui_flag_parses_in_both_positions():
     assert p.parse_args(["--ui"] + base).ui is True
     assert p.parse_args(base + ["--ui"]).ui is True
     assert p.parse_args(base).ui is False
+
+
+def test_validate_counts_rows_in_its_order_check(spark, tmp_path):
+    """`validate` takes the output's row count from the order check's own
+    per-run groupBy, so it runs 4 jobs on CSV wire input: 2 for the order
+    check and 2 for the source count (each a shuffle map stage plus its
+    result under AQE). It used to count the output twice more (8 jobs)."""
+    src, dst = str(tmp_path / "source"), str(tmp_path / "sorted_id")
+    cli.main(["produce", "--rows", "5000", "--format", "csv", "--out", src])
+    cli.main(["sort", "--key", "id", "--format", "csv", "--in", src, "--out", dst])
+    sc = spark.sparkContext
+    sc.setJobGroup("cli_validate_jobs", "validate job count")
+    try:
+        cli.main(["validate", "--key", "id", "--format", "csv", "--in", src, "--out", dst])
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cli_validate_jobs")) == 4
+
+
+def test_validate_still_catches_lost_rows(spark, tmp_path):
+    """The reused row count still guards conservation: an output missing a
+    row fails validate."""
+    import pytest
+
+    src, dst = str(tmp_path / "source"), str(tmp_path / "sorted_id")
+    cli.main(["produce", "--rows", "2000", "--out", src])
+    cli.main(["sort", "--key", "id", "--in", src, "--out", dst])
+    short = str(tmp_path / "short")
+    out = spark.read.parquet(dst)
+    first = out.agg(F.min("id")).first()[0]
+    out.where(F.col("id") != first).write.parquet(short)
+    with pytest.raises(AssertionError, match="not conserved"):
+        cli.main(["validate", "--key", "id", "--in", src, "--out", short])

@@ -412,6 +412,29 @@ def test_with_global_position_saturated_sample_is_layout_independent(
     )
 
 
+def test_boundary_sample_reaches_driver_as_one_task_result(spark):
+    """The boundary sample is collected as the smallest-n key tuples in
+    Spark order, gathered in ONE task: the driver gets a single task result
+    of at most n rows, however many partitions the input has. (A root
+    ORDER BY + LIMIT collect would merge every partition's top-n heap on
+    the driver, shipping the whole sample when partitions are small.)"""
+    n_rows, n = 4000, 25
+    df = spark.range(0, n_rows, 1, 8).select(
+        F.struct(F.pmod(F.col("id") * 7919, F.lit(n_rows)).alias("v")).alias("kt")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("gp_smallest_kt", "bounded boundary sample")
+    try:
+        got = sort_ops._smallest_kt(df, n)
+    finally:
+        sc.setJobGroup(None, None)
+    assert [r["kt"]["v"] for r in got] == list(range(n))
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("gp_smallest_kt")
+    result_stage = max(tracker.getJobInfo(job).stageIds)
+    assert tracker.getStageInfo(result_stage).numTasks == 1
+
+
 def test_with_global_position_dict_rank_premap_engages_and_is_exact(
     spark, monkeypatch
 ):

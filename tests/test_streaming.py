@@ -230,10 +230,10 @@ def test_registered_watermarks_are_the_drain_constant():
 
 
 def test_source_schema_memo_invalidates_on_mtime(spark, sf_dir, tmp_path):
-    """r17: the stream source's footer-schema read memoizes on
-    (path, mtime, size) — same schema object back within a fixture
-    generation, a fresh read (new entry) after the file changes, and
-    never a stale schema."""
+    """r17: the stream source's footer-schema read memoizes per path on
+    (mtime, size) — same schema object back within a fixture generation,
+    a fresh read (overwriting the path's entry) after the file changes,
+    and never a stale schema."""
     import os
     import shutil
 
@@ -253,7 +253,8 @@ def test_source_schema_memo_invalidates_on_mtime(spark, sf_dir, tmp_path):
     assert s2 is s1  # memo hit
     os.utime(p, (os.path.getatime(p), os.path.getmtime(p) + 10))
     s3 = ops._source_schema(spark, p)
-    assert len(ops._SCHEMA_MEMO) == 2  # mtime change -> new entry
+    assert s3 is not s1  # mtime change -> footer read again
+    assert len(ops._SCHEMA_MEMO) == 1  # ... overwriting the path's entry
     assert s3 == s1  # same file content -> equal schema, freshly read
 
 
@@ -294,5 +295,37 @@ def test_source_schema_memo_invalidates_on_inplace_part_rewrite(
     os.utime(part, (os.path.getatime(part), os.path.getmtime(part) + 10))
     os.utime(p, (dir_stat.st_atime, dir_stat.st_mtime))
     s3 = ops._source_schema(spark, p)
-    assert len(ops._SCHEMA_MEMO) == 2  # part-file change -> new entry
+    assert s3 is not s1  # part-file change -> footer read again
+    assert len(ops._SCHEMA_MEMO) == 1  # ... overwriting the path's entry
     assert s3 == s1  # same content -> equal schema, freshly read
+
+
+def test_source_schema_memo_keeps_one_entry_per_path(spark, sf_dir, tmp_path):
+    """Each rewrite of a part file re-reads the footer and OVERWRITES the
+    path's entry: regenerating fixtures any number of times leaves one
+    entry per path, never a trail of stale stat keys."""
+    import os
+    import shutil
+
+    from kafka_stream_sorter_spark.sources.parquet import table_path
+    from kafka_stream_sorter_spark.streaming import ops
+
+    src = table_path(sf_dir, "events")
+    if os.path.isdir(src):
+        src = os.path.join(
+            src, next(f for f in sorted(os.listdir(src)) if not f.startswith((".", "_")))
+        )
+    d = tmp_path / "events.parquet"
+    d.mkdir()
+    part = d / "part-00000.parquet"
+    shutil.copy(src, part)
+    p = str(d)
+    ops._SCHEMA_MEMO.clear()
+    seen = [ops._source_schema(spark, p)]
+    for bump in (10, 20):  # rewrite the part file in place, twice
+        shutil.copy(src, part)
+        os.utime(part, (os.path.getatime(part), os.path.getmtime(part) + bump))
+        seen.append(ops._source_schema(spark, p))
+        assert seen[-1] is not seen[-2]  # stale stats -> footer read again
+        assert list(ops._SCHEMA_MEMO) == [p]
+    assert seen[0] == seen[1] == seen[2]
