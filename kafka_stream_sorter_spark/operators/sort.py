@@ -755,15 +755,11 @@ def _composite_key(
     #      can decline the whole group first, skipping this job AND the
     #      encodes, when the boundary sample proves the pack wins
     #      nothing (near-unique leading prefix — lexicographic
-    #      short-circuit; see GP_REGIME_MIN_SAMPLE_FACTOR);
-    #   6. a REALIZED-WIDTH retry (r13, r12 ADVICE item 1): when the
-    #      optimistic initial selection strands a chosen field as a
-    #      singleton — or width-/sample-declines its wstr neighbor — the
-    #      grouping loop re-runs the selection once per field with the
-    #      neighbors' realized widths (driver-side arithmetic plus the
-    #      free sample pre-check; only a genuinely re-windowed field
-    #      re-enters the exact injectivity gate), so adjacent wstr-wstr
-    #      keys pack instead of silently falling back.
+    #      short-circuit; see GP_REGIME_MIN_SAMPLE_FACTOR).
+    # The window is chosen ONCE per field, against optimistic neighbor
+    # widths: a field whose neighbor's realized width then cannot share
+    # the budget stays a singleton on the struct compare — speed only,
+    # never positions.
     wstr_k: dict[int, tuple[int, int]] = {}  # idx -> (skip, nbytes)
     wstr_trivial: set[int] = set()  # proven injective without job C
     wstr_meta: dict[int, tuple[str, str, int]] = {}  # idx -> (min, max, skip)
@@ -775,81 +771,51 @@ def _composite_key(
     # the exact gate that fired rather than just the absence of a pack.
     wstr_decline: dict[int, str] = {}
 
-    def _win_w(i: int, k: int) -> tuple[int, int]:
-        """(span, width) of field i's k-byte window — the ONE home of
-        the window-size arithmetic, shared by the initial selection,
-        the realized-width retry, and the neighbor revive scan so the
-        three can never diverge."""
-        smin, smax, skip = wstr_meta[i]
-        s_k = string_prefix_order_long_py(smax, skip, k) - (
-            string_prefix_order_long_py(smin, skip, k)
-        )
-        return s_k, max(1, (s_k + 1).bit_length())
-
-    def _sample_clean(i: int, k: int) -> bool:
-        """Free collision pre-check: the k-byte windows of the sampled
-        values must be pairwise distinct. MONOTONE in k — distinct
-        k-byte windows stay distinct when extended — which is what lets
-        the revive scan's smallest clean k lower-bound every viable
-        window."""
-        skip = wstr_meta[i][2]
-        svals = {t[i] for t in sample_keys if t[i] is not None}
-        return len(
-            {string_prefix_order_long_py(v, skip, k) for v in svals}
-        ) == len(svals)
-
-    def _kcap(i: int) -> int:
-        """Widest USEFUL window for field i: every byte past the
-        longest value's end (max octet_length − skip, from job A) is a
-        0x00 pad for the WHOLE domain, so a wider window discriminates
-        identically while paying strictly more width — pure budget
-        waste that can strand a neighbor (r14; before this cap a
-        3-digit suffix billed 52 bits at k=7 instead of 20 at k=3).
-        Floor 1 keeps a constant domain (slen == skip) encodable."""
-        return max(1, min(7, int(agg_row[f"slen{i}"]) - wstr_meta[i][2]))
-
-    def _wstr_select(i: int, nbr: list[int]) -> bool:
-        """Pick the WIDEST window k ≤ _kcap(i) whose exact width can
-        share a 63-bit budget with some neighbor width in ``nbr``
+    def _wstr_select(i: int, nbr: list[int]) -> None:
+        """Pick the WIDEST window k ≤ the field's cap whose exact width
+        can share a 63-bit budget with some neighbor width in ``nbr``
         (injectivity is monotone in k: if the widest affordable window
         collides, every narrower one does too — one k is the optimal
         single test), run the free sample-collision pre-check, and
-        (re)derive the field's encode state. On failure records the
-        decline reason and demotes the field. Called once per candidate
-        with optimistic neighbor widths, then again from the grouping
-        loop with REALIZED widths when optimism stranded the field as a
-        singleton (r12 ADVICE item 1) — realized widths only tighten
-        the budget, so a re-selection never widens k."""
+        derive the field's encode state. On failure records the decline
+        reason and demotes the field."""
         smin, smax, skip = wstr_meta[i]
+        # window cap (r14): every byte past the longest value's end (max
+        # octet_length − skip, from job A) is a 0x00 pad for the WHOLE
+        # domain, so a wider window discriminates identically while
+        # paying strictly more width — pure budget waste that can strand
+        # a neighbor (before this cap a 3-digit suffix billed 52 bits at
+        # k=7 instead of 20 at k=3). Floor 1 keeps a constant domain
+        # (slen == skip) encodable.
+        kcap = max(1, min(7, int(agg_row[f"slen{i}"]) - skip))
         chosen = None
-        for k in range(_kcap(i), 0, -1):
-            s_k, w = _win_w(i, k)
+        for k in range(kcap, 0, -1):
+            s_k = string_prefix_order_long_py(smax, skip, k) - (
+                string_prefix_order_long_py(smin, skip, k)
+            )
+            w = max(1, (s_k + 1).bit_length())
             if w < 63 and any(w + wn <= 63 for wn in nbr):
                 chosen = (k, s_k)
                 break
         if chosen is None:
             packable[i] = False
-            wstr_k.pop(i, None)
-            wstr_trivial.discard(i)
             wstr_decline[i] = "width"
-            return False
+            return
         k, s_k = chosen
-        if not _sample_clean(i, k):
+        # free collision pre-check: the k-byte windows of the sampled
+        # values must be pairwise distinct
+        svals = {t[i] for t in sample_keys if t[i] is not None}
+        wins = {string_prefix_order_long_py(v, skip, k) for v in svals}
+        if len(wins) != len(svals):
             packable[i] = False  # proven non-injective, for free
-            wstr_k.pop(i, None)
-            wstr_trivial.discard(i)
             wstr_decline[i] = "sample_collision"
-            return False
+            return
         wstr_k[i] = (skip, k)
         if int(agg_row[f"slen{i}"]) <= skip + k and not agg_row[f"snul{i}"]:
             wstr_trivial.add(i)
-        else:
-            wstr_trivial.discard(i)
         lo[i] = string_prefix_order_long_py(smin, skip, k)
         span[i] = s_k
         enc[i] = string_prefix_order_long(kcols[i], skip, k)
-        wstr_decline.pop(i, None)
-        return True
 
     for i in wstr_idx:
         smin, smax = agg_row[f"slo{i}"], agg_row[f"shi{i}"]
@@ -867,13 +833,11 @@ def _composite_key(
         wstr_meta[i] = (str(smin), str(smax), skip)
 
         def _neighbor_w(j: int) -> int | None:
-            # exact width where known; optimistic 1 for a not-yet-chosen
-            # wstr neighbor. Optimism can lock in an over-wide window k
-            # for THIS field — if the neighbor's realized width later
-            # cannot share the budget, the grouping loop below re-runs
-            # the selection with realized widths (r12 ADVICE item 1), so
-            # the residual cost is one wasted injectivity test, never a
-            # silently missed pack on adjacent wstr-wstr keys.
+            # exact width where known (a chosen wstr neighbor is in lo);
+            # optimistic 1 for a not-yet-chosen wstr neighbor. Optimism
+            # can lock in an over-wide window k for THIS field — if the
+            # neighbor's realized width then cannot share the budget,
+            # this field stays a singleton (speed only, never positions).
             if not (0 <= j < len(keys)) or not packable[j]:
                 return None
             if j in lo:
@@ -882,11 +846,7 @@ def _composite_key(
             if kinds[j] == "str":
                 return max(1, (len(rmaps.get(j, ())) + 1).bit_length())
             if kinds[j] == "wstr":
-                kk = wstr_k.get(j)
-                if kk is None:
-                    return 1
-                mc = span[j] + 1
-                return max(1, mc.bit_length())
+                return 1
             return None
         nbr = [w for w in (_neighbor_w(i - 1), _neighbor_w(i + 1)) if w]
         _wstr_select(i, nbr)
@@ -940,13 +900,6 @@ def _composite_key(
     # re-checks any wstr newly pulled into a group (≤ |wstr fields|
     # rounds, each round one job).
     checked: set[int] = set(wstr_trivial)  # shortcut fields never need job C
-    retried: set[int] = set()  # one realized-width re-selection per field
-    retry_ok: set[int] = set()  # re-selections that actually re-windowed
-    revived: set[int] = set()  # declined neighbors revived into a pack
-    # pre-retry state of a re-windowed field: (wstr_k, lo, span, enc,
-    # trivial?, checked?) — consumed if the NARROWER exploratory window
-    # later fails the exact injectivity job (r13 ADVICE item 3)
-    retry_snap: dict[int, tuple] = {}
 
     # Leading-prefix regime gate (r14 verdict item 3 — the SCALING.md
     # rounds 13-14 regime law turned from documentation into behavior).
@@ -985,9 +938,7 @@ def _composite_key(
         # (the dominant pack tax, ~30s/100M) nor their per-row encodes.
         # Only wstr members demote — int/ts members cost nothing to pack
         # and may regroup among themselves. Each hit strictly shrinks
-        # wstr_k, so the loop still terminates; 'regime' is outside the
-        # revive scan's (width, sample_collision) set, so a regime
-        # decline stays dead.
+        # wstr_k, so the loop still terminates.
         regime_hit = False
         for g in fgroups:
             if len(g) < 2 or not any(i in wstr_k for i in g):
@@ -995,14 +946,8 @@ def _composite_key(
             if _regime_declines(g[0]):
                 for i in g:
                     if i in wstr_k:
-                        packable[i] = False
                         widths[i] = None
                         del wstr_k[i]
-                        wstr_trivial.discard(i)
-                        checked.discard(i)
-                        retry_ok.discard(i)
-                        revived.discard(i)
-                        retry_snap.pop(i, None)
                         wstr_decline[i] = "regime"
                 regime_hit = True
         if regime_hit:
@@ -1014,174 +959,25 @@ def _composite_key(
             for i in g
             if i in wstr_k and i not in checked
         ]
-        if need:
-            cd_row = df.agg(
-                *[
-                    a
-                    for i in need
-                    for a in (
-                        F.countDistinct(kcols[i]).alias(f"cd{i}"),
-                        F.countDistinct(enc[i]).alias(f"ce{i}"),
-                    )
-                ]
-            ).collect()[0]
-            for i in need:
-                checked.add(i)
-                if cd_row[f"cd{i}"] != cd_row[f"ce{i}"]:
-                    rsnap = retry_snap.pop(i, None)
-                    if rsnap is not None:
-                        # r13 ADVICE item 3: the retry's NARROWER window
-                        # failing the exact gate says nothing against the
-                        # field's ORIGINAL (wider, still valid, possibly
-                        # already proven) window — restore it instead of
-                        # demoting; the field stays a singleton and the
-                        # accounting later reads 'singleton', not the
-                        # exploratory window's 'injectivity'.
-                        old_k, old_lo, old_span, old_enc, was_triv, was_chk = rsnap
-                        wstr_k[i] = old_k
-                        lo[i], span[i], enc[i] = old_lo, old_span, old_enc
-                        if was_triv:
-                            wstr_trivial.add(i)
-                        if not was_chk:
-                            checked.discard(i)
-                        wstr_decline.pop(i, None)
-                        retry_ok.discard(i)
-                        widths[i] = _width(i)
-                        continue
-                    packable[i] = False
-                    widths[i] = None
-                    del wstr_k[i]
-                    wstr_trivial.discard(i)
-                    wstr_decline[i] = "injectivity"
-                    revived.discard(i)
-            continue  # regroup: a demotion can re-pair its neighbors
-        # Realized-width retry (r12 ADVICE item 1): the initial window
-        # selection saw optimistic width 1 for any not-yet-chosen wstr
-        # neighbor, which can lock in an over-wide k for the LEFT field;
-        # when the neighbor's realized width then can't share the 63-bit
-        # budget the field strands as a singleton even though a NARROWER
-        # (possibly still injective) window would have grouped. Re-run
-        # the selection once per stranded field with realized neighbor
-        # widths — driver-side arithmetic plus the free sample pre-check;
-        # only a genuinely re-windowed field re-enters the exact
-        # injectivity gate (narrower windows discriminate LESS, so the
-        # previous pass's proof does not transfer).
-        retry = None
-        for g in fgroups:
-            if len(g) != 1:
-                continue
-            i = g[0]
-            if i not in wstr_k or i in retried:
-                continue
-            # Realized budget partner per side (r13 ADVICE item 1): the
-            # retry's only gain is a LOWER group count, so a neighbor
-            # only counts if pairing with it can actually drop one. A
-            # LEFT neighbor absorbs i by extending its EXISTING group —
-            # the shareable width is that group's CUMULATIVE width, not
-            # the neighbor field's alone. A RIGHT neighbor pairs by
-            # re-forming a group at i, which EVICTS the tail of any
-            # ≥2 group it sits in (count unchanged) — so only right
-            # SINGLETONS qualify. Offering more than this could
-            # re-window i narrower (discarding its injectivity proof)
-            # for a grouping that can never pay. Either side is also
-            # skipped when even i's MINIMAL (1-byte) window can't share
-            # its budget.
-            min_w_i = _win_w(i, 1)[1]
-            group_of = {m: gg for gg in fgroups for m in gg}
-            nbr_real = []
-            for j in (i - 1, i + 1):
-                if not (0 <= j < len(keys)) or widths[j] is None:
-                    continue
-                if j == i - 1:
-                    wn = sum(widths[m] for m in group_of[j])
-                elif len(group_of[j]) == 1:
-                    wn = widths[j]
-                else:
-                    continue
-                if min_w_i + wn <= 63:
-                    nbr_real.append(wn)
-            # A wstr neighbor that declined on WIDTH or on a sample
-            # collision is not necessarily dead: it was sized against
-            # THIS field's over-wide optimistic window, and a narrower
-            # re-window here frees budget for a wider, still-injective
-            # window there (sample-injectivity is MONOTONE in k —
-            # distinct k-byte windows stay distinct when extended — so
-            # the smallest sample-clean k lower-bounds every viable
-            # window). Offer that minimal viable width as the budget
-            # target and revive the neighbor after this field
-            # re-windows. Exact-injectivity declines stay dead: reviving
-            # them would re-pay the countDistinct job on a guess.
-            revive = []
-            for j in (i - 1, i + 1):
-                if not (
-                    0 <= j < len(keys)
-                    and j not in retried
-                    and wstr_decline.get(j) in ("width", "sample_collision")
-                    and j in wstr_meta
-                ):
-                    continue
-                for kj in range(1, _kcap(j) + 1):
-                    _s, w_kj = _win_w(j, kj)
-                    if w_kj >= 63:
-                        break
-                    if _sample_clean(j, kj):
-                        if min_w_i + w_kj <= 63:
-                            revive.append(j)
-                            nbr_real.append(w_kj)
-                        break
-            if nbr_real:
-                retry = (i, nbr_real, revive)
-                break
-        if retry is None:
+        if not need:
             break
-        i, nbr_real, revive = retry
-        retried.add(i)
-        old = wstr_k[i]
-        snap = (lo[i], span[i], enc[i], i in wstr_trivial, i in checked)
-        if not _wstr_select(i, nbr_real):
-            # the retry is exploratory: a failed re-selection must not
-            # demote a field whose ORIGINAL window is valid — restore it
-            # (it simply stays a singleton; recording the re-selection's
-            # gate as a decline reason would miscount the accounting)
-            packable[i] = True
-            wstr_k[i] = old
-            lo[i], span[i], enc[i] = snap[:3]
-            if snap[3]:
-                wstr_trivial.add(i)
-            wstr_decline.pop(i, None)
-            widths[i] = _width(i)
-            continue
-        widths[i] = _width(i)
-        if wstr_k[i] != old:
-            retry_ok.add(i)
-            checked.discard(i)
-            if i in wstr_trivial:
-                checked.add(i)
-            else:
-                # arm the exact-gate rollback (r13 ADVICE item 3): if
-                # the narrower exploratory window fails injectivity the
-                # original state comes back instead of a demotion
-                retry_snap[i] = (old, *snap)
-        for j in revive:
-            retried.add(j)
-            packable[j] = True
-            prev_reason = wstr_decline.get(j)
-            if _wstr_select(j, [widths[i]]):
-                revived.add(j)
-                if j in wstr_trivial:
-                    # a revived field landing a trivially-injective window
-                    # is proven like any initial shortcut field — without
-                    # this it would re-enter `need` and pay the exact
-                    # countDistinct the shortcut exists to skip
-                    checked.add(j)
-            elif prev_reason is not None:
-                # the revive is exploratory too (r13 ADVICE item 2): a
-                # failed attempt under the tighter realized budget must
-                # not rewrite the ORIGINAL decline's reason (e.g.
-                # 'width' turning into 'sample_collision'), mirroring
-                # the retried-field restore above
-                wstr_decline[j] = prev_reason
-            widths[j] = _width(j)
+        cd_row = df.agg(
+            *[
+                a
+                for i in need
+                for a in (
+                    F.countDistinct(kcols[i]).alias(f"cd{i}"),
+                    F.countDistinct(enc[i]).alias(f"ce{i}"),
+                )
+            ]
+        ).collect()[0]
+        for i in need:
+            checked.add(i)
+            if cd_row[f"cd{i}"] != cd_row[f"ce{i}"]:
+                widths[i] = None
+                del wstr_k[i]
+                wstr_decline[i] = "injectivity"
+        # regroup: a demotion can re-pair its neighbors
     if info is not None and wstr_meta:
         # decline accounting (r12 ADVICE item 3): every wstr_meta field
         # paid job A's min/max + octet/NUL aggregates; the ones that end
@@ -1192,18 +988,6 @@ def _composite_key(
                 wstr_decline[i] = "singleton"
         info["wstr_candidate_fields"] = sorted(wstr_meta)
         info["wstr_declined"] = {i: wstr_decline[i] for i in sorted(wstr_decline)}
-        # retry observability (r13 verdict item 5, the pack-path mirror
-        # of the decline reasons): fields the realized-width retry
-        # actually RE-WINDOWED (rollbacks excluded) and declined
-        # neighbors it revived into the pack — so the gp verifier can
-        # assert the retry fired instead of inferring it from widths.
-        # Filtered against the FINAL packed set (r14 ADVICE item 2): a
-        # re-windowed field whose revived partner later fails its exact
-        # gate — or a revived field stranded by its partner's rollback —
-        # ends a singleton, and reporting it would claim a retry/revive
-        # with no pack to show for it.
-        info["wstr_retried"] = sorted(retry_ok & packed_w)
-        info["wstr_revived"] = sorted(revived & packed_w)
     if max(len(g) for g in fgroups) < 2:
         return None, rmaps
     if info is not None:

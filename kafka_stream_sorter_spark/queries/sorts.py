@@ -310,8 +310,8 @@ def keyed_fanout_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from a 64-char alphabet (the 2-byte window covers the whole
 # determinant, so it is sample-clean AND exactly injective by
 # construction). The constant tails ('-shard', '-v0') inflate the
-# optimistic first-pass window without adding discrimination — exactly
-# the front-loaded key class the realized-width retry exists for.
+# optimistic first-pass window without adding discrimination, which
+# strands the category key once the doc key declines.
 PAIR_A8 = "08FNVdlz"  # ascending ASCII, span 'z'-'0' = 74
 PAIR_B64 = (
     "./0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -355,22 +355,20 @@ PAIR_WIDE_SQL = "(event_id % 262144) * 35184372088832 + event_id"
 )
 def keyed_fanout_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positioned fanout keyed by TWO adjacent wide strings — (category
-    tag, doc id), the shape whose pack the r13 realized-width retry +
-    neighbor revive exists for (r13 verdict What's-missing item 3: the
-    retry was test-pinned but oracle-invisible; this registers it like
-    keyed_fanout_url registered the decline branch).
+    tag, doc id), a shape whose wide-string windows are chosen once per
+    field against optimistic neighbor widths and therefore DECLINE the
+    pack (registered in r14 like keyed_fanout_url registered the
+    sample-collision decline).
 
-    The engagement chain is DETERMINISTIC at any gate scale (alphabet
+    The decline chain is DETERMINISTIC at any gate scale (alphabet
     pigeonhole, not birthday odds — see PAIR_A8/PAIR_B64): the category
-    key's first pass locks a 55-bit window against an optimistic
-    width-1 neighbor (its '-shard' tail adds width, not information);
-    the doc key then only affords its 1-byte window, which collides in
-    any ≥9-value sample and DECLINES; the 59+-bit wide tie-break blocks
-    every alternative pairing. The grouping loop's retry re-windows the
-    category key to 6 bytes against the doc key's minimal sample-clean
-    width (15 bits), revives the doc key at its 2-byte window, and both
-    pass the exact injectivity job — a 62-bit composite, asserted via
-    stats (wstr_retried/wstr_revived) by
+    key locks a 55-bit window against an optimistic width-1 neighbor
+    (its '-shard' tail adds width, not information); the doc key then
+    only affords its 1-byte window, which collides in any ≥9-value
+    sample and declines with 'sample_collision'; the 59+-bit wide
+    tie-break blocks every alternative pairing, so the category key
+    ends a 'singleton' and all three fields search on the struct
+    compare (speed only, never positions). Both reasons are asserted by
     scripts/verify_gp_grouped_registered.py with the gate lowered, ×4
     partition configs through the chained exact gate. At driver-gate
     scale the min-rows gate keeps the struct path, which the oracle
@@ -414,7 +412,7 @@ def keyed_fanout_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     being paid; the pack's build tax ran 11-21% of wall for an
     exec-NEUTRAL 1.03). Registered (r15, r14 verdict stretch 8) so the
     regime-gate decision branch is oracle-visible like keyed_fanout_url
-    pinned sample_collision and keyed_fanout_pair pinned retry+revive:
+    and keyed_fanout_pair pinned their sample_collision declines:
     scripts/verify_gp_grouped_registered.py first proves the shape is
     genuinely PACKABLE (lowered gate, default sampling — the regime
     gate's factor-2 floor is deterministically inert at fixture sample

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import stat
 import tempfile
 from contextlib import contextmanager
 
@@ -99,14 +100,18 @@ def _source_schema(spark, path: str):
             # untouched. Fold the part files' own (name, mtime, size)
             # into the key so that rewrite invalidates too. One listdir +
             # stat per call — still metadata-only and ~1000× cheaper than
-            # the JVM footer read this memo avoids. Fixture layouts are
-            # flat; nested dirs would fall through to Spark's own error.
-            key += tuple(
-                (name, st.st_mtime, st.st_size)
+            # the JVM footer read this memo avoids.
+            entries = [
+                (name, os.stat(os.path.join(path, name)))
                 for name in sorted(os.listdir(path))
                 if not name.startswith((".", "_"))
-                for st in (os.stat(os.path.join(path, name)),)
-            )
+            ]
+            if any(stat.S_ISDIR(st.st_mode) for _, st in entries):
+                # nested partition directories (key=val/…): a rewrite
+                # below the top level changes no stat'ed entry, so the
+                # memo could serve a stale schema — read it fresh
+                return spark.read.parquet(path).schema
+            key += tuple((name, st.st_mtime, st.st_size) for name, st in entries)
     except OSError:
         return spark.read.parquet(path).schema  # let Spark raise its error
     hit = _SCHEMA_MEMO.get(path)

@@ -13,10 +13,12 @@ Usage: python scripts/dump_plan_inventory.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -76,7 +78,7 @@ def main() -> None:
             )
         )
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write(
             "# Physical-plan inventory (auto-generated)\n\n"
             f"`python scripts/dump_plan_inventory.py` at `{SF}`. One row per\n"

@@ -19,7 +19,7 @@ hand-edited, and separately bounds every query's attestation age.
 
 Usage (from anywhere):
 
-    python /root/repo/scripts/gen_priority.py [--changed NAME ...]
+    python scripts/gen_priority.py [--changed NAME ...]
 
 ``--changed`` lists queries whose implementation or oracle was modified
 this round; they are pinned to the front in the given order and recorded

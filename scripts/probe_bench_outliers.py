@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SUSPECTS: dict[str, float] = {  # r3 single-shot seconds (BENCH_r03 tail)
     "topk": 0.157,

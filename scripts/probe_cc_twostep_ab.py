@@ -15,9 +15,10 @@ on (a) the real sf0.1 LSH dup graph, (b) a synthetic long-chain graph
 plan-analysis blowup (round wall GROWING with round index) is visible
 directly. B ships only if byte-equal, faster, and flat per-round walls.
 """
-import sys, time, functools
+import os, sys, time, functools
 print = functools.partial(print, flush=True)
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import numpy as np
 from pyspark.sql import functions as F
 

@@ -21,7 +21,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REPEATS = int(sys.argv[1]) if len(sys.argv) > 1 else 4
 ROWS = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000_000

@@ -28,7 +28,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REPL = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
 SF_DIR = "/root/testdata/sf0.01"  # 500 docs -> 1M at REPL=2000

@@ -26,7 +26,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
 N_ROWS = int(ARGS[0]) if ARGS else 300_000_000

@@ -17,11 +17,13 @@ Run EXCLUSIVELY.
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REPEATS = int(sys.argv[1]) if len(sys.argv) > 1 else 4
 SYNTH_ROWS = int(sys.argv[2]) if len(sys.argv) > 2 else 300_000

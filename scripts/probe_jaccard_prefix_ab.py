@@ -5,8 +5,9 @@ re-computed self-join sides in _prefix_filtered_jaccard?  A = unpinned
 B = pinned (one materialization). Alternating repeats in ONE session
 per the CLAUDE.md timing rules, matmul calib bracket, warmed session.
 """
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import numpy as np
 
 def calib():

@@ -44,7 +44,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
 N_LEFT = int(ARGS[0]) if ARGS else 50_000_000

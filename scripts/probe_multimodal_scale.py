@@ -26,7 +26,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
 

@@ -5,8 +5,9 @@ progress telemetry (durationMs phases + stateOperators commit times)
 plus wall brackets around source construction, query start, and
 termination. Run EXCLUSIVELY (one Spark session).
 """
-import sys, time, tempfile, json
-sys.path.insert(0, "/root/repo")
+import os, sys, time, tempfile, json
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from kafka_stream_sorter_spark.session import get_spark
 from kafka_stream_sorter_spark.streaming import ops

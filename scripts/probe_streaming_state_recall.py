@@ -45,7 +45,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000_000
 N_BATCHES = int(sys.argv[2]) if len(sys.argv) > 2 else 8

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Driver-replica harness: exercises /root/repo/__spark_entry__.py exactly
+"""Driver-replica harness: exercises the repo's __spark_entry__.py exactly
 the way the round driver does — entry() smoke at sf0.001, then every
 queries() entry at sf0.01 compared against oracle_sql() via DuckDB
 (row count + schema + order-insensitive values). Run from anywhere:
 
-    python /root/repo/scripts/verify_driver_contract.py [sf_dir]
-    python /root/repo/scripts/verify_driver_contract.py --exact [sf_dir] [query ...]
+    python scripts/verify_driver_contract.py [sf_dir]
+    python scripts/verify_driver_contract.py --exact [sf_dir] [query ...]
 
 ``--exact`` (r4 verdict, next-round item 2) closes the gap that let a
 merge-order-nondeterministic query sail through two rounds of green
@@ -22,12 +22,12 @@ in either mode (fast iteration); unknown names fail loudly."""
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import os
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 _args = [a for a in sys.argv[1:]]
 EXACT = "--exact" in _args
@@ -55,7 +55,7 @@ EXACT_CONFIGS = (("8", "true"), ("3", "false"), ("32", "true"), ("200", "true"))
 def main() -> int:
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.join(REPO, "tests"))
     from oracle_utils import compare_frames, duck_connect, value_hash
 
     # Deliberately a VANILLA session (not session.get_spark): the round

@@ -21,13 +21,12 @@ attests the struct-compare path:
     to the struct compare, asserted by REASON so a silent pack (or a
     silent wrong-reason decline) fails; the fallback's positions are
     proven against the registered oracle like the pack paths.
-  * keyed_fanout_pair  — (cat, doc, wide): the RETRY+REVIVE path
-    (r14, r13 verdict What's-missing item 3) — the category key's
-    optimistic first-pass window strands it, the doc key declines on
-    a pigeonhole-deterministic 1-byte sample collision, and the
-    realized-width retry must RE-WINDOW cat while the neighbor
-    revive brings doc back, asserted via wstr_retried/wstr_revived
-    so a pack that arrived without the r13 machinery fails.
+  * keyed_fanout_pair  — (cat, doc, wide): a second DECLINE path —
+    the category key's window is chosen once against an optimistic
+    neighbor width, the doc key then declines on a
+    pigeonhole-deterministic 1-byte sample collision, and the category
+    key is stranded as a singleton; asserted by reason like the URL
+    shape, with positions proven against the registered oracle.
   * keyed_fanout_unique — (uniq, doc): the REGIME-decline path (r15,
     r14 verdict item 3) — first proven genuinely packable under the
     lowered gate with default sampling (the regime gate's factor-2
@@ -51,7 +50,7 @@ run really engaged the composite with the expected search-field count —
 a proof that silently fell back would be no proof.
 
 Usage:
-    python /root/repo/scripts/verify_gp_grouped_registered.py [sf_dir]
+    python scripts/verify_gp_grouped_registered.py [sf_dir]
 
 Also invoked IN-PROCESS by ``verify_driver_contract.py --exact`` (r11
 verdict item 5): the registry-wide closing gate chains this check
@@ -71,8 +70,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 # argv is parsed only under __main__ — an importer's argv (e.g. the
 # contract gate's `--exact`) must not leak into the default sf
@@ -175,23 +175,20 @@ def main(sf: str | None = None, names=None) -> int:
         "keyed_fanout_ts": 3,
         "keyed_fanout_score": 3,
         "keyed_fanout_name": 2,
-        "keyed_fanout_pair": 3,
         "keyed_fanout_unique": 2,
     }
-    # the decline shape: the composite must NOT engage, for the right
-    # reason, and the struct fallback must still match the oracle
-    decline_shapes = {"keyed_fanout_url": {1: "sample_collision"}}
+    # the decline shapes: the composite must NOT engage, for the right
+    # reasons, and the struct fallback must still match the oracle
+    decline_shapes = {
+        "keyed_fanout_url": {1: "sample_collision"},
+        "keyed_fanout_pair": {0: "singleton", 1: "sample_collision"},
+    }
     # the regime shape (r15): provably packable under the lowered gate
     # with default sampling (asserted via raw_fields above), but with
     # GP_SAMPLE_MOD=1 — the sample IS the table, so the decision is
     # pigeonhole-deterministic — the per-row-unique leading key must
     # fire the leading-prefix regime gate and decline BOTH fields
     regime_shapes = {"keyed_fanout_unique": {0: "regime", 1: "regime"}}
-    # the retry shape (r14): the realized-width retry must RE-WINDOW the
-    # named field and the neighbor revive must bring the named declined
-    # field back into the pack — a pack that silently arrived some other
-    # way (or fell back) is no proof of the r13 machinery
-    retry_shapes = {"keyed_fanout_pair": {"retried": [0], "revived": [1]}}
     shapes = list(raw_fields) + list(decline_shapes)
     if names is not None:
         shapes = [n for n in shapes if n in set(names)]
@@ -238,8 +235,7 @@ def main(sf: str | None = None, names=None) -> int:
             )
         if name in decline_shapes:
             # the mirror of the pack assertions: a silent PACK — or a
-            # decline at any gate other than the free sample-collision
-            # pre-check — fails
+            # decline at any gate other than the expected ones — fails
             if stats.get("composite_key") is not False:
                 failures.append(f"{name}: decline shape engaged a composite")
             if stats.get("wstr_packed_fields"):
@@ -273,26 +269,6 @@ def main(sf: str | None = None, names=None) -> int:
                 f"name field (wstr_packed_fields="
                 f"{stats.get('wstr_packed_fields')})"
             )
-        if name in retry_shapes:
-            exp = retry_shapes[name]
-            want_packed = sorted(exp["retried"] + exp["revived"])
-            if stats.get("wstr_packed_fields") != want_packed:
-                failures.append(
-                    f"{name}: retry shape expected packed fields "
-                    f"{want_packed}, got {stats.get('wstr_packed_fields')}"
-                )
-            if stats.get("wstr_retried") != exp["retried"]:
-                failures.append(
-                    f"{name}: realized-width retry did not re-window "
-                    f"fields {exp['retried']} "
-                    f"(wstr_retried={stats.get('wstr_retried')})"
-                )
-            if stats.get("wstr_revived") != exp["revived"]:
-                failures.append(
-                    f"{name}: neighbor revive did not fire on fields "
-                    f"{exp['revived']} "
-                    f"(wstr_revived={stats.get('wstr_revived')})"
-                )
         if name in regime_shapes:
             # the pack just proven above is what the regime gate must
             # take away once the sample is decisive: exhaustive-sample

@@ -1,9 +1,11 @@
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def test_entry_smoke(spark):

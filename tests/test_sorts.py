@@ -973,12 +973,11 @@ def test_with_global_position_random_multitype_property(spark, monkeypatch):
     from narrow/wide ints, floats with NaN/-0.0/nulls, low-card strings,
     doc-id and URL-style wide strings, timestamps) with the composite
     gate lowered: positions must equal row_number over Spark's own
-    orderBy for EVERY shape, whatever mix of pack / retry / revive /
-    decline the machinery picks. This is the blanket over path
-    interactions the shape-specific tests can't enumerate — in
-    particular random ADJACENT wstr-wstr pairs exercising the r13
-    realized-width retry, and wstr fields beside ints/floats that force
-    partial groups. The per-shape fast paths are bit-order-isomorphic
+    orderBy for EVERY shape, whatever mix of pack / decline the
+    machinery picks. This is the blanket over path interactions the
+    shape-specific tests can't enumerate — in particular random
+    ADJACENT wstr-wstr pairs sized against optimistic neighbor widths,
+    and wstr fields beside ints/floats that force partial groups. The per-shape fast paths are bit-order-isomorphic
     by design, so exact equality is the correct oracle."""
     import datetime
     import random

@@ -329,3 +329,35 @@ def test_source_schema_memo_keeps_one_entry_per_path(spark, sf_dir, tmp_path):
         assert seen[-1] is not seen[-2]  # stale stats -> footer read again
         assert list(ops._SCHEMA_MEMO) == [p]
     assert seen[0] == seen[1] == seen[2]
+
+
+def test_source_schema_nested_partition_rewrite_sees_new_schema(spark, tmp_path):
+    """A partitioned source (key=val/part files) is read fresh on every
+    call: an in-place rewrite of a NESTED part file changes no top-level
+    entry's stat, so a memo keyed on top-level stats would keep serving
+    the pre-rewrite schema."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_stream_sorter_spark.streaming import ops
+
+    d = tmp_path / "events.parquet"
+    part_dir = d / "key=1"
+    part_dir.mkdir(parents=True)
+    part = part_dir / "part-00000.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    p = str(d)
+    ops._SCHEMA_MEMO.clear()
+    s1 = ops._source_schema(spark, p)
+    assert "b" not in s1.fieldNames()
+    # rewrite the nested part file in place with a wider schema; pin
+    # both directories' mtimes so no top-level stat changes
+    dir_stats = [os.stat(x) for x in (d, part_dir)]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), part)
+    for x, st in zip((d, part_dir), dir_stats):
+        os.utime(x, (st.st_atime, st.st_mtime))
+    s2 = ops._source_schema(spark, p)
+    assert "b" in s2.fieldNames(), s2
+    assert p not in ops._SCHEMA_MEMO

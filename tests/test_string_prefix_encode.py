@@ -353,14 +353,12 @@ def test_wide_string_singleton_skips_injectivity_job(spark):
 
 def test_wide_string_adjacent_pair_realized_width_retry(spark, monkeypatch):
     """Adjacent wstr-wstr keys, the shape optimistic neighbor sizing
-    mis-sizes (r12 ADVICE item 1): the LEFT field locks the widest
-    window against an optimistic width-1 neighbor, the RIGHT field then
-    can't share the 63-bit budget except at a sample-colliding k=1 and
-    declines — pre-retry this silently missed a feasible pack. The
-    grouping loop must re-run the selection with REALIZED widths: left
-    narrows (still injective), right revives at its minimal
-    sample-clean window, both pass the exact injectivity job, and the
-    pair packs with positions bit-identical to Spark's struct order."""
+    mis-sizes: the LEFT field locks the widest window against an
+    optimistic width-1 neighbor, and the RIGHT field then can't share the
+    63-bit budget except at a sample-colliding k=1. The window is chosen
+    once per field (there is no realized-width retry), so the right field
+    declines, the left one strands as a singleton, and no pack forms.
+    That costs speed only: positions still equal Spark's struct order."""
     n = 900
     rows_wide = []
     for i in range(n):
@@ -382,13 +380,12 @@ def test_wide_string_adjacent_pair_realized_width_retry(spark, monkeypatch):
     comp, rmaps = sort_ops._composite_key(
         df, ("a", "b", "tb"), kcols, sample_keys, bounds, info=info
     )
-    assert comp is not None, info
-    assert info.get("wstr_packed_fields") == [0, 1], info
-    # realized-width retry narrowed the left window and revived the
-    # right at its minimal sample-clean window
-    assert info["wstr_windows"][0] == (1, 5), info
-    assert info["wstr_windows"][1] == (1, 3), info
-    assert info.get("wstr_declined") in (None, {}), info
+    assert comp is None, info
+    assert info.get("wstr_candidate_fields") == [0, 1], info
+    assert info.get("wstr_declined") == {
+        0: "singleton",
+        1: "sample_collision",
+    }, info
     # end-to-end: positions must equal Spark's struct order exactly
     monkeypatch.setattr(sort_ops, "GP_SAMPLE_MOD", 4)
     monkeypatch.setattr(sort_ops, "GP_COMPOSITE_MIN_ROWS", 0)
@@ -399,7 +396,7 @@ def test_wide_string_adjacent_pair_realized_width_retry(spark, monkeypatch):
         .select("tb")
         .collect()
     )
-    assert stats.get("wstr_packed_fields") == [0, 1], stats
+    assert stats.get("composite_key") is False, stats
     expect = [
         r["tb"]
         for r in df.orderBy(
@@ -409,56 +406,12 @@ def test_wide_string_adjacent_pair_realized_width_retry(spark, monkeypatch):
     assert [r["tb"] for r in got] == expect
 
 
-def test_revived_trivial_field_skips_injectivity_job(spark):
-    """A revived neighbor that lands a trivially-injective window (its
-    whole tail fits the window, no trailing NUL) is proven by
-    construction like any initial shortcut field — the exact
-    countDistinct job must run for the RE-WINDOWED left field only.
-    Pre-fix the revived field missed the `checked` bookkeeping and paid
-    the full-table agg the shortcut exists to skip."""
-    n = 900
-    rows = []
-    for i in range(n):
-        a = f"A{(i * 2654435761) % 100000:05d}00"  # 8B, not trivial at k=5
-        b = f"B{(i * 48271) % 1000:03d}"  # 4B: whole tail fits k=3 → trivial
-        rows.append((a, b, ((i * 2654435761) % (1 << 30)) << 32))
-    df = spark.createDataFrame(rows, "a string, b string, tb long")
-    kcols = [F.col("a"), F.col("b"), F.col("tb")]
-    sample_keys = [tuple(r) for r in rows[:400]]
-    bounds = [tuple(rows[200]), tuple(rows[500])]
-
-    calls: list = []
-    orig_agg = type(df).agg
-
-    def spy_agg(self, *ar, **kw):
-        calls.append([str(c) for c in ar])
-        return orig_agg(self, *ar, **kw)
-
-    import unittest.mock as mock
-
-    info: dict = {}
-    with mock.patch.object(type(df), "agg", spy_agg):
-        comp, rmaps = sort_ops._composite_key(
-            df, ("a", "b", "tb"), kcols, sample_keys, bounds, info=info
-        )
-    assert comp is not None, info
-    assert info.get("wstr_packed_fields") == [0, 1], info
-    assert info.get("wstr_trivial_fields") == [1], info
-    flat = [s for call in calls for s in call]
-    n_cd = sum(s.lower().count("count(") for s in flat)
-    # exactly ONE cd/ce pair — the re-windowed left field; the revived
-    # trivial right field must not appear in any countDistinct agg
-    assert n_cd == 2, (n_cd, flat)
-
-
 def test_failed_retry_restores_original_window_and_accounting(spark):
-    """A retry re-selection that fails (every narrower window collides
-    in the sample) must RESTORE the field's original, valid window and
-    leave no decline reason — the field was never declined, it merely
-    stayed a singleton. Pre-fix the exploratory failure demoted the
-    field and recorded the retry's gate ('sample_collision') in the
-    decline accounting, miscounting exactly what r12 ADVICE item 3
-    added the stats for."""
+    """A field whose only clean window is too wide to share a budget
+    (every narrower window collides in the sample) keeps that valid
+    window and no decline reason of its own — it was never declined, it
+    merely stayed a singleton. Only its neighbor's gate
+    ('sample_collision') lands in the decline accounting."""
     n = 900
     rows = []
     for i in range(n):
@@ -488,14 +441,10 @@ def test_failed_retry_restores_original_window_and_accounting(spark):
 
 
 def test_retry_skips_right_neighbor_inside_full_group(spark):
-    """r13 ADVICE item 1: the retry's only gain is a LOWER group count.
-    A RIGHT neighbor sitting inside a ≥2 group can only pair with the
-    stranded field by EVICTING its group tail — count unchanged — so
-    offering its bare width re-windows the stranded field narrower
-    (discarding its trivially-proven window and paying a fresh exact
-    injectivity job) for zero gain. Pre-fix: a re-windows to k=2, packs
-    with b, evicts c, and pays one countDistinct agg; post-fix the
-    retry does not fire at all."""
+    """A stranded wstr field keeps its trivially-proven singleton window.
+    Its RIGHT neighbor sits inside a ≥2 group, and pairing with it could
+    only EVICT that group's tail (group count unchanged), so the field
+    is neither re-windowed nor charged an exact injectivity job."""
     n = 900
     rows = []
     for i in range(n):
@@ -523,106 +472,21 @@ def test_retry_skips_right_neighbor_inside_full_group(spark):
         )
     assert comp is not None, info
     # [b, c] is the one ≥2 group; a must KEEP its proven singleton
-    # window instead of stealing b out of it (pre-fix: [a, b] + evicted
-    # c, wstr_packed_fields == [0, 1])
+    # window instead of stealing b out of it
     assert info.get("wstr_packed_fields") == [1], info
-    assert info.get("wstr_retried") == [], info
-    assert info.get("wstr_revived") == [], info
     # both wstr windows are trivially proven — no exact injectivity agg
-    # may run (pre-fix the futile re-window paid one for field a)
+    # may run
     flat = [s for call in calls for s in call]
     n_cd = sum(s.lower().count("count(") for s in flat)
     assert n_cd == 0, (n_cd, flat)
 
 
-def test_failed_revive_keeps_original_decline_reason(spark):
-    """r13 ADVICE item 2: a revive attempt that fails under the tighter
-    realized budget must not rewrite the neighbor's ORIGINAL decline
-    reason. Here b declines on WIDTH (a's 56-bit initial window leaves
-    a 7-bit budget, below even b's 1-byte window), the retry re-windows
-    a against its LEFT neighbor's larger budget, and the revive of b
-    then fails on a sample collision — pre-fix the accounting flipped
-    'width' into 'sample_collision'."""
-    n = 900
-    rows = []
-    for i in range(n):
-        # first tail byte mixes ASCII '0' (0x30) with the first byte of
-        # a 2-byte UTF-8 char (0xC3) — span ≥ 2^55 at k=7 (w=56)
-        a = ("0" if i % 2 == 0 else "ê") + f"{i % 100:02d}000"
-        b = ("0" if i % 3 == 0 else "ê") + f"{i % 100:02d}"
-        rows.append(((i * 577) % (1 << 20), a, b))
-    df = spark.createDataFrame(rows, "p long, a string, b string")
-    kcols = [F.col("p"), F.col("a"), F.col("b")]
-    sample_keys = [tuple(r) for r in rows[:400]]
-    bounds = [tuple(rows[200]), tuple(rows[500])]
-
-    info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
-        df, ("p", "a", "b"), kcols, sample_keys, bounds, info=info
-    )
-    assert comp is not None, info
-    # the retry narrows a from k=7 (w=56) to k=5 (w=40) and packs it
-    # with p; b's revive is then only offered k=2, which collides (all
-    # odd-class values share the 0xC3 0xAA window) and fails
-    assert info.get("wstr_packed_fields") == [1], info
-    assert info.get("wstr_retried") == [1], info
-    assert info.get("wstr_revived") == [], info
-    # the load-bearing assertion: b's ORIGINAL width decline survives
-    # the failed revive (pre-fix: {2: 'sample_collision'})
-    assert info.get("wstr_declined") == {2: "width"}, info
-
-
-def test_retried_field_failing_injectivity_restores_original_window(spark):
-    """r13 ADVICE item 3: when a retried field's NARROWER exploratory
-    window later fails the exact injectivity job, the field's original
-    (wider, trivially-proven) window must come back and the field stays
-    a valid singleton — pre-fix it was demoted outright and the
-    accounting reported the exploratory window's 'injectivity' instead
-    of 'singleton'."""
-    n = 900
-    rows = []
-    for i in range(n):
-        a = f"A{i:04d}00"  # 'A0' + 3 varying digits + '00': k=5 trivial
-        b = f"B{(i * 97) % 90000 + 10000:05d}77"
-        rows.append((a, b))
-    # planted sample collision for b below k=5 (shared '1000' prefix)
-    rows[0] = (rows[0][0], "B1000077")
-    rows[1] = (rows[1][0], "B1000377")
-    # the poison pair: 'A000199' ties with row 1's 'A000100' in any
-    # window of ≤3 tail bytes but is OUTSIDE the sample — so the retry's
-    # k=3 re-window passes the free pre-check and only the exact
-    # countDistinct job catches it
-    rows.append(("A000199", "B9999977"))
-    df = spark.createDataFrame(rows, "a string, b string")
-    kcols = [F.col("a"), F.col("b")]
-    sample_keys = [tuple(r) for r in rows[:400]]
-    bounds = [tuple(rows[200]), tuple(rows[500])]
-
-    info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
-        df, ("a", "b"), kcols, sample_keys, bounds, info=info
-    )
-    # the restored original window is 36 bits wide and b's revived
-    # window is 36 — they cannot share 63 bits, so no pack survives;
-    # what matters is the ACCOUNTING: a was never declined, it merely
-    # stayed a singleton on its original valid window
-    assert comp is None, info
-    assert info.get("wstr_declined") == {
-        0: "singleton",
-        1: "singleton",
-    }, info
-    # the rolled-back re-window must not be reported as a live retry
-    assert info.get("wstr_retried") == [], info
-
-
 def test_fixed_suffix_pair_packs_first_pass_without_retry(spark):
     """r14 window cap: with windows capped at the realized max tail
     length, a fixed-length-suffix adjacent pair sizes correctly on the
-    FIRST pass (no pad-inflated 52-bit window, no strand, no retry) —
-    the retry machinery stays reserved for front-loaded keys whose
-    width comes from constant mid-key runs. Without the cap this shape
-    only packed via the full retry+revive detour (one extra exact
-    injectivity round)."""
+    FIRST pass (no pad-inflated 52-bit window, no strand). Without the
+    cap the left field would lock a 52-bit window and strand the
+    pair."""
     n = 900
     rows = []
     for i in range(n):
@@ -641,57 +505,9 @@ def test_fixed_suffix_pair_packs_first_pass_without_retry(spark):
     assert comp is not None, info
     assert info.get("wstr_packed_fields") == [0, 1], info
     assert info.get("wstr_windows") == {0: (1, 3), 1: (1, 4)}, info
-    # the load-bearing assertion: the pack arrived WITHOUT the retry
-    assert info.get("wstr_retried") == [], info
-    assert info.get("wstr_revived") == [], info
     # both windows cover their whole tails -> trivially injective, no
     # exact countDistinct job was needed either
     assert info.get("wstr_trivial_fields") == [0, 1], info
-
-
-def test_retry_stats_exclude_fields_that_did_not_pack(spark):
-    """r14 ADVICE item 2: wstr_retried/wstr_revived must report packs,
-    not attempts. Here the retry re-windows the left field (valid,
-    passes its exact gate) and revives the right one — but the revived
-    partner then FAILS the exact injectivity job on a poison pair
-    outside the sample, so the final grouping packs neither. Pre-fix
-    the stats still claimed wstr_retried=[0]: a retry with no pack to
-    show for it."""
-    n = 900
-    rows = []
-    for i in range(n):
-        # identical shape to the adjacent-pair retry test: left locks an
-        # optimistic k=7 window, right declines at a sample-colliding
-        # k=1, the retry narrows left to k=5 and revives right at k=3
-        a = f"A{(i * 2654435761) % 100000:05d}00"
-        b = f"B{(i * 48271) % 1000:03d}0000"
-        rows.append((a, b, ((i * 2654435761) % (1 << 30)) << 32))
-    # poison: two b values sharing their k=3 window ('999') with each
-    # other AND with the regular 'B9990000', differing only past it —
-    # outside the sample, so only the revived window's exact
-    # countDistinct catches them (cd=902 vs ce=900)
-    rows.append((f"A{(900 * 2654435761) % 100000:05d}00", "B9991111", 1 << 40))
-    rows.append((f"A{(901 * 2654435761) % 100000:05d}00", "B9992222", 2 << 40))
-    df = spark.createDataFrame(rows, "a string, b string, tb long")
-    kcols = [F.col("a"), F.col("b"), F.col("tb")]
-    sample_keys = [tuple(r) for r in rows[:80]]
-    bounds = [tuple(rows[200]), tuple(rows[500])]
-
-    info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
-        df, ("a", "b", "tb"), kcols, sample_keys, bounds, info=info
-    )
-    # the revived partner's injectivity failure dissolves the pack
-    assert comp is None, info
-    assert info.get("wstr_declined") == {
-        0: "singleton",
-        1: "injectivity",
-    }, info
-    # the load-bearing assertions: the retry DID fire and re-window a,
-    # but with no surviving pack the stats must not report it (pre-fix:
-    # wstr_retried == [0])
-    assert info.get("wstr_retried") == [], info
-    assert info.get("wstr_revived") == [], info
 
 
 def test_regime_near_unique_leading_declines_before_exact_job(spark):
@@ -731,7 +547,6 @@ def test_regime_near_unique_leading_declines_before_exact_job(spark):
         )
     assert comp is None, info
     assert info.get("wstr_declined") == {0: "regime", 1: "regime"}, info
-    assert info.get("wstr_retried") == [], info
     # the tax the gate exists to remove: zero countDistinct aggregates
     # ran (job A's min/max/octet agg is count-free)
     flat = [s for call in calls for s in call]

@@ -14,12 +14,15 @@ driver's.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 spark = (
@@ -64,7 +67,7 @@ print("VANILLA_GUARD_PASS")
 
 def test_queries_run_under_vanilla_session():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, REPO],
         capture_output=True,
         text=True,
         timeout=600,
