@@ -8,10 +8,16 @@ Derived from CORRECTNESS_r*.json through round 17.
 from __future__ import annotations
 
 LATEST_ROUND = 17
-CHANGED: list[str] = ['keyed_fanout_pair']
+CHANGED: list[str] = ['keyed_fanout', 'keyed_fanout_pair', 'keyed_fanout_name', 'keyed_fanout_score', 'keyed_fanout_ts', 'keyed_fanout_unique', 'keyed_fanout_url']
 
 PRIORITY: list[str] = [
+    'keyed_fanout',  # newest green: r17
     'keyed_fanout_pair',  # newest green: r17
+    'keyed_fanout_name',  # newest green: r17
+    'keyed_fanout_score',  # newest green: r17
+    'keyed_fanout_ts',  # newest green: r17
+    'keyed_fanout_unique',  # newest green: r17
+    'keyed_fanout_url',  # newest green: r17
     'sort_multikey_nulls',  # newest green: r15
     'sample_hash_split',  # newest green: r15
     'sample_stratified',  # newest green: r15
@@ -96,12 +102,6 @@ PRIORITY: list[str] = [
     'dedup_ngram_jaccard',  # newest green: r17
     'dedup_simhash',  # newest green: r17
     'doc_fingerprint',  # newest green: r17
-    'keyed_fanout',  # newest green: r17
-    'keyed_fanout_name',  # newest green: r17
-    'keyed_fanout_score',  # newest green: r17
-    'keyed_fanout_ts',  # newest green: r17
-    'keyed_fanout_unique',  # newest green: r17
-    'keyed_fanout_url',  # newest green: r17
     'sort_low_cardinality',  # newest green: r17
     'stream_cdc_upsert',  # newest green: r17
     'stream_dedup_keys',  # newest green: r17

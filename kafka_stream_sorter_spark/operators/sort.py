@@ -81,10 +81,9 @@ def _lit_rank_map(rmap: dict):
 
     ks = sorted(rmap)
     if not ks:
-        # preserve the replaced F.create_map(*[]) contract: a valid empty
-        # map whose lookups are NULL, not a driver crash — current call
-        # sites all guard non-empty, but the fallback keeps the contract
-        return F.create_map()
+        # both callers guard non-empty (an all-null domain codes to a
+        # constant); an empty map here is a caller bug, not a lookup
+        raise ValueError("_lit_rank_map needs at least one key")
     vals_sql = "array(" + ",".join(f"{int(rmap[k])}L" for k in ks) + ")"
     k0 = ks[0]
     # every branch below gates on ALL keys, not just ks[0]: a mixed-type
@@ -296,27 +295,23 @@ GP_TARGET_ROWS_PER_BUCKET = 16_384
 #: rows) — both driver-trivial, so 16384+ is open if a deployment
 #: needs it.
 GP_MAX_BUCKETS = 8192
-#: Dict-rank premap gate for STRING key fields in the position machinery
-#: (the sort_with_tiebreak radix trick applied to the bucket search + the
-#: final window sort): a ≤64-entry create_map is probed linearly per row
-#: (CLAUDE.md rule), paid ONCE, and replaces ~log2(GP_MAX_BUCKETS) UTF8
-#: ordering compares in the search plus ~log2(rows/task) compares in the
-#: window sort — break-even sits near ~70 entries, so 64. Smaller than
-#: DICT_SORT_MAX_KEYS (256) because that map's payoff (a radix-prefix
-#: composite) is larger per row than this one's. Strings only: UTF-8
-#: byte order ≡ codepoint order, so Python ``sorted()`` reproduces
-#: Spark's ascending order (the float/NaN hazard can't arise).
+#: Cardinality cap that classifies a STRING key field for the rank-pack
+#: (_composite_key): at most this many distinct values make a low-card
+#: field coded by its rank in a literal map (probed linearly per row,
+#: CLAUDE.md rule, so the cap keeps the encode cheap); more make a
+#: wide-string prefix-window candidate. Strings only: UTF-8 byte order ≡
+#: codepoint order, so Python ``sorted()`` reproduces Spark's ascending
+#: order (the float/NaN hazard can't arise).
 GP_DICT_RANK_MAX_KEYS = 64
-#: est_rows gate for the key-encoding fast paths (the 2-key composite
-#: AND the dict-rank premap): both exist only to cheapen the per-row
-#: bucket-search/window-sort comparisons, a cost the 300M probes put at
-#: 2.4×/extra-field — but each costs 1-2 keys-only pre-jobs
-#: (groupBy(f0) / global min-max agg / distinct) that can never pay for
-#: themselves where the search cost is invisible. At sf0.1 the pre-jobs
-#: cost keyed_fanout ~+0.6s for zero win (r9 verdict, the one adverse
-#: bench mover); the 150M/300M probes bound where the win IS real
-#: (composite: 327→85s, 463→125s at 300M). 20M sits comfortably between
-#: fixture scale and the smallest probed win scale.
+#: est_rows gate for the rank-pack: it exists only to cheapen the
+#: per-row bucket-search/window-sort comparisons, a cost the 300M probes
+#: put at 2.4×/extra-field — but it costs keys-only pre-jobs (the fused
+#: stats agg, plus the wide-string injectivity agg) that can never pay
+#: for themselves where the search cost is invisible. At sf0.1 the
+#: pre-jobs cost keyed_fanout ~+0.6s for zero win (r9 verdict, the one
+#: adverse bench mover); the 150M/300M probes bound where the win IS
+#: real (composite: 327→85s, 463→125s at 300M). 20M sits comfortably
+#: between fixture scale and the smallest probed win scale.
 GP_COMPOSITE_MIN_ROWS = 20_000_000
 #: Engagement floor for the wide-string REGIME gate (r14 verdict item
 #: 3): a group's pack is declined with reason 'regime' when the
@@ -370,8 +365,8 @@ def _composite_key(
     est_rows: int | None = None,
     n_buckets: int | None = None,
 ):
-    """(composite_expr_and_bounds_or_None, string_rank_maps) for N-field
-    key shapes that rank-pack into ONE long — the r10 generalization of
+    """Packed search groups (or None) for N-field key shapes that
+    rank-pack into ONE long — the r10 generalization of
     the two round-9 pair composites (this function subsumes and replaces
     `_two_key_composite` / `_integral_pair_composite`).
 
@@ -440,18 +435,14 @@ def _composite_key(
     decomposition probe), and the r10 fallback probe put the best-case
     three-field shape at 9.95× its plain-sort control at 150M.
 
-    Returns ``(groups, rmaps)`` where groups is a list of
-    ``{"idx": [field indices], "expr": Column|None, "bounds":
-    [packed ints]|None}`` — one entry per SEARCH field, packed groups
-    carrying their composite expr/bounds and singletons (expr None)
-    left for the caller to wire raw or rank-premapped. ``(None,
-    rmaps)`` when no group of ≥2 fields exists — <2 keys, no adjacent
+    Returns a list of ``{"idx": [field indices], "expr": Column|None,
+    "bounds": [packed ints]|None}`` — one entry per SEARCH field, packed
+    groups carrying their composite expr/bounds and singletons (expr
+    None) left for the caller to search on the raw key column. ``None``
+    when no group of ≥2 fields exists — <2 keys, no adjacent
     packable-KIND pair (early, before any job), per-field width
-    overflows, fused-distinct truncation (a sampled-low but
-    actually-wide string domain), or a bound value outside an exact
-    domain (non-deterministic source belt). The returned ``rmaps``
-    carry any exact string domains job B already paid for, so the
-    `_dict_rank_maps` fallback never repeats them.
+    overflows, declined wide-string windows, or a bound value outside
+    an exact domain (non-deterministic source belt).
 
     ``est_rows`` / ``n_buckets`` (keyword-only, both-or-inert) feed the
     leading-prefix regime gate: rows-per-bucket = est_rows // n_buckets
@@ -471,8 +462,7 @@ def _composite_key(
     sort_array(collect_set), sliced executor-side to
     GP_DICT_RANK_MAX_KEYS + 1 values with its exact size) per
     sample-classified low-card string — the exact size replaces the old
-    attributed-truncation loop, and the returned rmaps feed
-    `_dict_rank_maps` as precomputed domains."""
+    attributed-truncation loop, and the domain is the field's rank map."""
     from pyspark.sql import types as T
 
     from kafka_stream_sorter_spark.functions.numeric import (
@@ -487,7 +477,7 @@ def _composite_key(
     floatish = (T.DoubleType, T.FloatType)
     rmaps: dict[int, dict] = {}
     if len(keys) < 2:
-        return None, rmaps
+        return None
     kinds: list[str] = []
     for i, k in enumerate(keys):
         dt = df.schema[k].dataType
@@ -593,7 +583,7 @@ def _composite_key(
     # bail before paying either pre-job (preserves the old early-outs
     # for e.g. (float, int) or a high-card-sampled string pair)
     if not any(packable[i] and packable[i + 1] for i in range(len(keys) - 1)):
-        return None, rmaps
+        return None
     # FUSED stats pre-job (r17, r16 verdict item 1): the former job B
     # (exact low-card string domains) and job A (per-field min/max +
     # wide-string window stats) ride ONE keys-only aggregation — one
@@ -714,7 +704,7 @@ def _composite_key(
         if not any(
             packable[i] and packable[i + 1] for i in range(len(keys) - 1)
         ):
-            return None, rmaps
+            return None
     lo: dict[int, int] = {}
     span: dict[int, int] = {}
     wstr_idx.sort()  # reclassifications append out of key order
@@ -989,7 +979,7 @@ def _composite_key(
         info["wstr_candidate_fields"] = sorted(wstr_meta)
         info["wstr_declined"] = {i: wstr_decline[i] for i in sorted(wstr_decline)}
     if max(len(g) for g in fgroups) < 2:
-        return None, rmaps
+        return None
     if info is not None:
         info["wstr_packed_fields"] = sorted(
             i for g in fgroups if len(g) >= 2 for i in g if i in wstr_k
@@ -1047,64 +1037,7 @@ def _composite_key(
                 acc = (acc << widths[i]) + _code_val(i, b[i])
             comp_bounds.append(acc)
         groups.append({"idx": g, "expr": comp_expr, "bounds": comp_bounds})
-    return groups, rmaps
-
-
-def _dict_rank_maps(
-    df: DataFrame,
-    keys: tuple,
-    kcols: list,
-    sample_keys: list,
-    bounds: list,
-    precomputed: dict | None = None,
-) -> dict:
-    """{field index: {string value: rank}} for low-cardinality string key
-    fields, where rank order ≡ Spark's string order (order isomorphism —
-    so bucket ids and window row_numbers are BIT-IDENTICAL to the
-    string-compare path; only the comparison cost changes).
-
-    Gated twice: the already-collected boundary sample must show ≤
-    GP_DICT_RANK_MAX_KEYS distinct values (free), then ONE exact
-    distinct job per surviving field (keys-only scan, limit-bounded
-    collect) confirms the full domain — a value outside the map would
-    rank NULL and mis-sort, so near-miss cardinalities fall back to
-    string compares. The 300M/16384 probe motivating this measured the
-    2-key (string, long) positioned write at 4.6× the (long,)-keyed one
-    in the same window while their plain-sort controls were EQUAL —
-    the gap is UTF8 ordering compares in the bucket search (14/row)
-    and the per-bucket window sort (SCALING.md round-9).
-
-    ``precomputed`` carries exact string domains `_composite_key`'s
-    distinct job already paid for (r10) — those fields skip the
-    per-field distinct job here (the bounds-coverage belt still runs)."""
-    from pyspark.sql import types as T
-
-    out: dict[int, dict] = {}
-    for i, k in enumerate(keys):
-        if not isinstance(df.schema[k].dataType, T.StringType):
-            continue
-        if precomputed and i in precomputed:
-            if not any(b[i] not in precomputed[i] for b in bounds):
-                out[i] = precomputed[i]
-            continue
-        if len({t[i] for t in sample_keys}) > GP_DICT_RANK_MAX_KEYS:
-            continue
-        vals = [
-            r["v"]
-            for r in df.select(kcols[i].alias("v"))
-            .distinct()
-            .limit(GP_DICT_RANK_MAX_KEYS + 1)
-            .collect()
-        ]
-        if len(vals) > GP_DICT_RANK_MAX_KEYS:
-            continue
-        rmap = {v: j for j, v in enumerate(sorted(v for v in vals if v is not None))}
-        # belt: every bound value must be mappable (can only fail on a
-        # non-deterministic source, which the operator excludes anyway)
-        if any(b[i] not in rmap for b in bounds):
-            continue
-        out[i] = rmap
-    return out
+    return groups
 
 
 def _weighted_bounds(pairs: list, n_buckets: int) -> list:
@@ -1197,17 +1130,17 @@ def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -
        low. That is exactly the asc-nulls-first order the final window
        uses, so null-keyed rows land in the right bucket. Bucket id =
        |{bounds < key}| is monotone in key order by construction.
-       Low-cardinality STRING fields are first rank-encoded through an
-       exact dict premap (``_dict_rank_maps``) so the search levels AND
-       the final window sort compare longs instead of UTF8 strings —
-       order-isomorphic, positions bit-identical; measured motivation
-       and win in SCALING.md round-9 (the 300M 2-key write ran 4.6× the
-       unique-key one in the same window purely on string compares).
-    3. **Exact bucket counts** (second job, keys only) → driver prefix sum
-       (≤ n_buckets values, never rows) → a literal offsets ARRAY indexed
-       by bucket id (an O(1) constant-folded lookup per row — r6 used a
-       broadcast hash join here, which the r7 50M decomposition billed at
-       ~19 s of per-row probe overhead for driver-known data).
+       Each search field is either a packed ``_composite_key`` group (one
+       long standing for a run of adjacent key fields, order-isomorphic)
+       or a raw key column; the search levels and the final window sort
+       use the same fields, so positions are bit-identical either way.
+    3. **Exact bucket counts** (one more job, keys only; skipped when
+       there are no bounds, since one bucket's offset is 0) → driver
+       prefix sum (≤ n_buckets values, never rows) → a literal offsets
+       ARRAY indexed by bucket id (an O(1) constant-folded lookup per
+       row — r6 used a broadcast hash join here, which the r7 50M
+       decomposition billed at ~19 s of per-row probe overhead for
+       driver-known data).
     4. ``row_number`` windowed per bucket + offset = global position.
 
     Unlike a ``spark_partition_id``-based scheme over ``orderBy`` (rounds
@@ -1340,82 +1273,48 @@ def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -
         step = max(1, (len(cand) + n_buckets - 1) // n_buckets)
         bounds = cand[step - 1 :: step][: n_buckets - 1]
 
-    # Key-shape fast paths, engaged only when the sample-estimated table
+    # Key-shape fast path, engaged only when the sample-estimated table
     # size clears GP_COMPOSITE_MIN_ROWS (below it the per-field compare
-    # cost they remove is invisible while their keys-only pre-jobs are
-    # not — the r9 verdict's +0.6s keyed_fanout fixture tax); both are
-    # order-isomorphic, so positions are bit-identical to plain struct
-    # compares in every regime:
-    # 1. rank-pack — ANY ≥2-field mix of integral/timestamp and low-card
-    #    string fields folds ADJACENT runs that fit 63 bits into one
-    #    long each, collapsing search AND window sort toward the
-    #    unique-key cost profile (_composite_key; measured: 300M pair
-    #    wins 463→125s / 327→85s, 150M 3-field 9.95×→4.75×, 300M
-    #    3-field 1.19× a plain sort); shapes whose widths overflow one
-    #    long still shrink their SEARCH FIELD COUNT (the measured cost
-    #    axis) via partial groups;
-    # 2. dict-rank premap — low-card string fields left ungrouped
-    #    rank-encode so comparisons run on longs (_dict_rank_maps,
-    #    reusing any domains the pack's distinct job already paid).
-    rank_maps: dict[int, dict] = {}
+    # cost it removes is invisible while its keys-only pre-jobs are not —
+    # the r9 verdict's +0.6s keyed_fanout fixture tax): the rank-pack
+    # folds ADJACENT runs of integral/timestamp/float/string fields that
+    # fit 63 bits into one long each, collapsing search AND window sort
+    # toward the unique-key cost profile (_composite_key; measured: 300M
+    # pair wins 463→125s / 327→85s, 150M 3-field 9.95×→4.75×, 300M
+    # 3-field 1.19× a plain sort). It is order-isomorphic, so positions
+    # are bit-identical to plain struct compares in every regime. Every
+    # field it leaves out — or all of them, when it declines — is
+    # searched and sorted on the raw key column. Leftover low-card
+    # strings are NOT rank-mapped first: per-level rank lookups push the
+    # search stage's generated method past HotSpot's 8,000-byte JIT
+    # limit, so it runs interpreted (a 4× slower write at 10M rows,
+    # SCALING.md).
     groups = None
-    pre_rmaps: dict[int, dict] = {}
     comp_info: dict = {}
     if bounds and est_rows >= GP_COMPOSITE_MIN_ROWS:
-        groups, pre_rmaps = _composite_key(
+        groups = _composite_key(
             df, keys, kcols, sample_keys, bounds, info=comp_info,
             est_rows=est_rows, n_buckets=n_buckets,
         )
-        if groups is None:
-            rank_maps = _dict_rank_maps(
-                df, keys, kcols, sample_keys, bounds, precomputed=pre_rmaps
-            )
+    if groups is None:  # every key field is its own search field
+        groups = [{"idx": [i], "expr": None} for i in range(len(keys))]
     bucketed = df
-    rank_cols: list[str] = []
-
-    def _rank_col(i: int, rmap: dict):
-        # shared by both branches: materialize the rank premap column
-        nonlocal bucketed
-        rc = f"_gp_rk{i}"
+    pack_cols: list[str] = []
+    sort_exprs = []
+    search_bounds = []
+    for j, g in enumerate(groups):
+        if g["expr"] is None:
+            i = g["idx"][0]
+            sort_exprs.append(kcols[i])
+            search_bounds.append([b[i] for b in bounds])
+            continue
+        rc = f"_gp_ck{j}"
         while rc in bucketed.columns:
             rc += "_"
-        lookup = _lit_rank_map(rmap)[kcols[i]].cast("long")
-        bucketed = bucketed.withColumn(rc, lookup)
-        rank_cols.append(rc)
-        return F.col(rc)
-
-    if groups is not None:
-        sort_exprs = []
-        search_bounds = []
-        for j, g in enumerate(groups):
-            if g["expr"] is not None:
-                rc = f"_gp_ck{j}"
-                while rc in bucketed.columns:
-                    rc += "_"
-                bucketed = bucketed.withColumn(rc, g["expr"])
-                rank_cols.append(rc)
-                sort_exprs.append(F.col(rc))
-                search_bounds.append(g["bounds"])
-                continue
-            i = g["idx"][0]
-            rmap = pre_rmaps.get(i)
-            if rmap and not any(b[i] not in rmap for b in bounds):
-                rank_maps[i] = rmap  # singleton premap (stats + sort)
-                sort_exprs.append(_rank_col(i, rmap))
-                search_bounds.append([rmap[b[i]] for b in bounds])
-            else:
-                sort_exprs.append(kcols[i])
-                search_bounds.append([b[i] for b in bounds])
-    else:
-        sort_exprs = list(kcols)
-        for i in sorted(rank_maps):
-            sort_exprs[i] = _rank_col(i, rank_maps[i])
-        search_bounds = [
-            [rank_maps[i][b[i]] for b in bounds]
-            if i in rank_maps
-            else [b[i] for b in bounds]
-            for i in range(len(keys))
-        ]
+        bucketed = bucketed.withColumn(rc, g["expr"])
+        pack_cols.append(rc)
+        sort_exprs.append(F.col(rc))
+        search_bounds.append(g["bounds"])
 
     # bucket id = |{i : key > bounds[i]}| (strict: a key equal to a bound
     # stays in the bound's own bucket), computed by binary search over
@@ -1467,22 +1366,19 @@ def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -
         bucketed = bucketed.withColumn(
             "_gp_bucket", F.col(pos_col).cast("int")
         ).drop(pos_col)
-    else:
-        bucketed = bucketed.withColumn("_gp_bucket", F.lit(0).cast("int"))
-    if not bounds and stats is None:
-        # Single-bucket degenerate (tiny tables / the sf0.01 driver gate):
-        # the offsets array is [0] no matter what the count job returns —
-        # the global position IS the window row_number. Skip the exact
-        # bucket-count pass entirely; one fewer keys-only job per call
-        # (r16). Kept when ``stats`` is requested so the probe/test
-        # observability fields (total_rows, max_bucket_rows, …) stay
-        # exact; positions are unaffected either way.
-        by_bucket: dict[int, int] = {}
-    else:
         counts = (
             bucketed.groupBy("_gp_bucket").count().orderBy("_gp_bucket").collect()
         )
         by_bucket = {r["_gp_bucket"]: r["count"] for r in counts}
+    else:
+        # Single-bucket degenerate (tiny tables / the sf0.01 driver gate):
+        # the offsets array is [0] whatever a count job would return —
+        # the global position IS the window row_number — so no exact
+        # bucket-count job runs (r16), whether or not ``stats`` is passed:
+        # observing must not change the plan, so the count-derived stats
+        # read None here.
+        bucketed = bucketed.withColumn("_gp_bucket", F.lit(0).cast("int"))
+        by_bucket = {}
     # prefix-sum over EVERY bucket id (empty buckets included, offset =
     # running total) → a ≤GP_MAX_BUCKETS-entry literal array; the per-row offset is
     # element_at(literal, bucket+1) — a constant-folded O(1) lookup, NOT
@@ -1497,19 +1393,18 @@ def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -
         stats.update(
             sample_rows=n_samples,
             n_buckets=len(bounds) + 1,
-            populated_buckets=len(by_bucket),
-            total_rows=acc,
-            max_bucket_rows=max(by_bucket.values()) if by_bucket else 0,
+            populated_buckets=len(by_bucket) if bounds else None,
+            total_rows=acc if bounds else None,
+            max_bucket_rows=max(by_bucket.values(), default=0) if bounds else None,
             resample_truncated=resample_truncated,
-            dict_rank_fields=sorted(rank_maps),
-            composite_key=groups is not None,
+            composite_key=bool(pack_cols),
             search_fields=len(sort_exprs),
             **comp_info,
         )
     off_arr = F.lit([int(v) for v in offs])  # one py4j call → array<long> literal
-    # the window orders by the RANK columns where a premap engaged —
+    # the window orders by the packed columns where the pack engaged —
     # order-isomorphic to the raw keys, so row_number is unchanged while
-    # the per-bucket sort compares longs instead of UTF8 strings
+    # the per-bucket sort compares one long per packed group
     w = Window.partitionBy("_gp_bucket").orderBy(*[c.asc() for c in sort_exprs])
     return (
         bucketed.withColumn(
@@ -1519,5 +1414,5 @@ def with_global_position(df: DataFrame, *keys: str, stats: dict | None = None) -
                 + F.element_at(off_arr, F.col("_gp_bucket") + F.lit(1))
             ).cast("long"),
         )
-        .drop("_gp_bucket", *rank_cols)
+        .drop("_gp_bucket", *pack_cols)
     )

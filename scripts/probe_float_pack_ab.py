@@ -21,7 +21,7 @@ Arms (same synthetic events frame as probe_gp_fallback.py):
   float_packed   (type, score, id) — packed (type+score fold, 2 search
                  fields); per-row cost includes double_order_long
   float_declined same keys, _composite_key suppressed (pre-r11 path:
-                 3-field struct search, dict premap on f0)
+                 3-field struct search on the raw key columns)
   ts_packed      (type, ts, id) — the r10 grouped shape (2 search
                  fields, integer arithmetic only): POSITIVE CONTROL —
                  r10 measured grouped/declined 0.68 reproduced within
@@ -109,9 +109,7 @@ def main() -> None:
     for r in range(REPEATS):
         for label, (keys, packed, want_fields) in arms.items():
             if not packed:
-                sort_ops._composite_key = (
-                    lambda *a, **kw: (None, {})
-                )
+                sort_ops._composite_key = lambda *a, **kw: None
             stats: dict = {}
             try:
                 t0 = time.perf_counter()

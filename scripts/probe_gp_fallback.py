@@ -27,9 +27,9 @@ The probe now measures BOTH regimes in one invocation:
     instead of 3 (want_search_fields asserts it).
   * `declined`: (event_type, user_hash, event_id) where user_hash is a
     raw xxhash64 (span ≈ 2^64 — overflows the 63-bit budget alone, so
-    every group is a singleton and the dict-rank premap engages on f0
-    only). This is the TRUE remaining fallback: per-field
-    struct-compare search, ~2.4×/extra field (r9 decomposition probe).
+    every group is a singleton and every field is searched raw). This
+    is the TRUE remaining fallback: per-field struct-compare search,
+    ~2.4×/extra field (r9 decomposition probe).
 
 Each config gets its own in-window plain `orderBy` control to the same
 parquet sink — the ratio is the machine-independent number (CLAUDE.md
@@ -130,9 +130,8 @@ def main() -> None:
             ["event_type", "score", "event_id"],
             False,
             3,
-            # exact pre-r11 behavior for a float key: _composite_key
-            # found no adjacent packable pair and returned (None, {})
-            # WITHOUT paying a job, then the dict premap engaged on f0
+            # pre-r11 behavior for a float key: _composite_key found no
+            # adjacent packable pair and declined WITHOUT paying a job
             "pre_r11",
         ),
     }
@@ -146,7 +145,7 @@ def main() -> None:
         default_gate = sort_ops.GP_COMPOSITE_MIN_ROWS
         orig_ck = sort_ops._composite_key
         if gate == "pre_r11":
-            sort_ops._composite_key = lambda *a, **kw: (None, {})
+            sort_ops._composite_key = lambda *a, **kw: None
         elif gate is not None:
             sort_ops.GP_COMPOSITE_MIN_ROWS = gate
         stats: dict = {}
@@ -170,8 +169,6 @@ def main() -> None:
         assert stats["composite_key"] is want_composite, (label, stats)
         if want_fields is not None:
             assert stats["search_fields"] == want_fields, (label, stats)
-        if not want_composite:
-            assert stats["dict_rank_fields"] == [0], (label, stats)
 
         # count/sum conservation on the persisted output (cheap vs the
         # adjacency join; 300M adjacency exactness for this machinery is

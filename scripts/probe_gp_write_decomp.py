@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Decompose the 2-key positioned-write gap (SCALING.md round-9).
 
-At 300M/16384 the (event_type, event_id) positioned WRITE runs ~4×
-its unique-key twin in the same window even after the dict-rank premap
-removed the string compares from the bucket search (build ratio
-collapsed 2.8 → 1.27) — so the remaining cost is NOT the search. This
-probe splits each config's pipeline at the sink:
+At 300M/16384 the (event_type, event_id) positioned WRITE ran ~4×
+its unique-key twin in the same window even with the string compares
+removed from the bucket search (build ratio collapsed 2.8 → 1.27) — so
+the remaining cost is NOT the search. This probe splits each config's
+pipeline at the sink:
 
-  noop sink     = scan + rank premap + bucket search + hash shuffle +
+  noop sink     = scan + key packing + bucket search + hash shuffle +
                   window sort + row_number   (no encoding, no disk)
   parquet sink  = the same + parquet encode + disk
 
@@ -93,7 +93,6 @@ def main() -> None:
         t0 = time.perf_counter()
         pos_df = sort_ops.with_global_position(events, *keys, stats=stats)
         rec["position_build_sec"] = round(time.perf_counter() - t0, 1)
-        rec["dict_rank_fields"] = stats.get("dict_rank_fields")
 
         t0 = time.perf_counter()
         pos_df.write.format("noop").mode("overwrite").save()

@@ -8,18 +8,17 @@ Arms (the registered keyed_fanout_url shape at probe scale — a
 low-card segment, a URL whose sample collision always declines, a wide
 id; alternating repeats, noop sink, calib bracket per CLAUDE.md):
 
-  url_candidate   normal path: _composite_key runs job B (segment
-                  domain, reused by the dict premap), job A's min/max +
-                  octet_length + NUL aggregates over 100M URL strings,
-                  the free driver-side sample-collision scan, then
-                  declines — the struct fallback executes
-  url_suppressed  _composite_key suppressed outright: no job A/B at
-                  all; the dict premap pays its own per-field distinct
-                  for the segment; the same struct fallback executes
+  url_candidate   normal path: _composite_key runs its fused stats job
+                  (segment domain, plus min/max + octet_length + NUL
+                  aggregates over 100M URL strings), the free
+                  driver-side sample-collision scan, then declines —
+                  the struct fallback executes
+  url_suppressed  _composite_key suppressed outright: no stats job at
+                  all; the same struct fallback executes
 
 Exec phases are identical by construction (both run the declined
-struct search), so the BUILD delta is the decline tax: job A over the
-string column minus job B's reuse credit.
+struct search), so the BUILD delta is the decline tax: the stats job
+over the string column.
 
 Usage: python scripts/probe_url_decline_tax.py [n_rows] [repeats]
 Default 100M x 3. Run EXCLUSIVELY.
@@ -91,9 +90,7 @@ def main() -> None:
     for _ in range(REPEATS):
         for label in arms:
             if label == "url_suppressed":
-                sort_ops._composite_key = (
-                    lambda *a, **kw: (None, {})
-                )
+                sort_ops._composite_key = lambda *a, **kw: None
             stats: dict = {}
             try:
                 t0 = time.perf_counter()

@@ -16,8 +16,8 @@ the registered keyed_fanout_name shape at probe scale):
                  injectivity gate over 100M strings (the new pre-job this
                  probe must price)
   name_declined  same keys, _composite_key suppressed (pre-r12 path:
-                 3-field struct search, dict premap on seg, UTF8
-                 compares on the name in search AND window sort)
+                 3-field struct search on the raw key columns, UTF8
+                 compares on seg and name in search AND window sort)
   ts_packed      (seg, ts, id) — POSITIVE CONTROL: r10/r11 measured
                  grouped/declined exec 0.60-0.68; reproducing it
                  validates the method in this window
@@ -107,9 +107,7 @@ def main() -> None:
     for r in range(REPEATS):
         for label, (keys, packed, want_fields) in arms.items():
             if not packed:
-                sort_ops._composite_key = (
-                    lambda *a, **kw: (None, {})
-                )
+                sort_ops._composite_key = lambda *a, **kw: None
             stats: dict = {}
             try:
                 t0 = time.perf_counter()

@@ -183,7 +183,7 @@ def test_float_wide_domain_declines_free(spark, monkeypatch):
     # overrides agg, so a base-class patch never intercepts (r12 found
     # the agg spies in this suite were vacuous for exactly this reason)
     monkeypatch.setattr(type(df), "agg", _no_agg)
-    comp, rmaps = sort_ops._composite_key(
+    comp = sort_ops._composite_key(
         df, ("score", "tb"), kcols, sample_keys, bounds
     )
     assert comp is None

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_stream_sorter_spark.operators import sort as sort_ops
@@ -435,14 +436,14 @@ def test_boundary_sample_reaches_driver_as_one_task_result(spark):
     assert tracker.getStageInfo(result_stage).numTasks == 1
 
 
-def test_with_global_position_dict_rank_premap_engages_and_is_exact(
+def test_with_global_position_low_card_string_pack_is_exact(
     spark, monkeypatch
 ):
-    """r9: low-cardinality STRING key fields are rank-encoded via an exact
-    dict map, so the bucket search and the window sort compare longs —
-    positions must be BIT-IDENTICAL to the string-compare order (order
-    isomorphism), including null strings (rank NULL sorts first, same as
-    the string). Engagement is observable via stats.dict_rank_fields."""
+    """A low-cardinality STRING key field packs by its exact rank with the
+    integral tie-break into one long, so the bucket search and the window
+    sort compare longs — positions must be BIT-IDENTICAL to the
+    string-compare order (order isomorphism), including null strings (the
+    null slot sorts first, same as the string)."""
     monkeypatch.setattr(sort_ops, "GP_SAMPLE_MOD", 2)
     monkeypatch.setattr(sort_ops, "GP_COMPOSITE_MIN_ROWS", 0)
     rows = [
@@ -459,19 +460,20 @@ def test_with_global_position_dict_rank_premap_engages_and_is_exact(
     assert stats["n_buckets"] >= 2
     # (low-card string, integral tb) takes the one-long composite path
     assert stats["composite_key"] is True, stats
-    # rank columns must not leak into the output schema
+    # packed columns must not leak into the output schema
     assert [r for r in got[0].asDict() if r.startswith("_gp")] == []
     assert [r["global_pos"] for r in got] == list(range(1, len(rows) + 1))
     expect = sorted(rows, key=lambda r: ((r[0] is not None, r[0] or ""), r[1]))
     assert [(r["k"], r["tb"]) for r in got] == expect
 
 
-def test_with_global_position_dict_rank_declines_high_cardinality(
+def test_with_global_position_high_card_string_key_is_exact(
     spark, monkeypatch
 ):
-    """A string key whose domain exceeds GP_DICT_RANK_MAX_KEYS must fall
-    back to plain string compares (a partial map would rank unseen values
-    NULL and mis-sort) — and positions stay exact either way."""
+    """A string key whose domain exceeds GP_DICT_RANK_MAX_KEYS never gets
+    a rank map (a partial map would rank unseen values NULL and mis-sort)
+    — here it packs through the wide-string prefix window instead — and
+    positions stay exact."""
     monkeypatch.setattr(sort_ops, "GP_SAMPLE_MOD", 2)
     monkeypatch.setattr(sort_ops, "GP_COMPOSITE_MIN_ROWS", 0)
     n = 4000
@@ -484,7 +486,6 @@ def test_with_global_position_dict_rank_declines_high_cardinality(
         .select("k", "tb", "global_pos")
         .collect()
     )
-    assert stats["dict_rank_fields"] == [], stats
     assert [(r["k"], r["tb"]) for r in got] == sorted(rows)
 
 
@@ -492,9 +493,7 @@ def test_with_global_position_composite_gates_and_fallback(spark, monkeypatch):
     """r10: the generic rank-pack accepts negative tie-breaks (offset by
     the table min — the r9 pair composite declined them), but a tie-break
     whose SPAN overflows the 63-bit budget must decline and fall back to
-    the dict-rank premap — with positions exact in both regimes, and the
-    premap REUSING the string domain the composite's distinct job already
-    collected (no second distinct job; observable via dict_rank_fields)."""
+    raw per-field compares — with positions exact in both regimes."""
     monkeypatch.setattr(sort_ops, "GP_SAMPLE_MOD", 2)
     monkeypatch.setattr(sort_ops, "GP_COMPOSITE_MIN_ROWS", 0)
     n = 3000
@@ -514,8 +513,6 @@ def test_with_global_position_composite_gates_and_fallback(spark, monkeypatch):
             .collect()
         )
         assert stats["composite_key"] is want_composite, stats
-        # when the composite declines, the dict-rank premap takes over
-        assert stats["dict_rank_fields"] == ([] if want_composite else [0]), stats
         assert [(r["k"], r["tb"]) for r in got] == sorted(rows)
 
 
@@ -586,7 +583,6 @@ def test_with_global_position_three_field_composite(spark, monkeypatch):
         .collect()
     )
     assert stats["composite_key"] is True, stats
-    assert stats["dict_rank_fields"] == [], stats
     expect = sorted(
         rows,
         key=lambda r: (
@@ -620,7 +616,7 @@ def test_composite_key_width_budget_and_mixed_fields(spark, monkeypatch):
     assert stats["composite_key"] is True, stats
     assert [(r["k1"], r["k2"], r["tb"]) for r in got] == sorted(rows)
 
-    # double key field: not packable, premap still covers the strings
+    # double key field: not packable, every field compares raw
     drows = [(f"a{(i * 7) % 3}", float(i % 13) / 7.0, i) for i in range(n)]
     ddf = spark.createDataFrame(drows, "k1 string, k2 double, tb long")
     dstats: dict = {}
@@ -631,7 +627,6 @@ def test_composite_key_width_budget_and_mixed_fields(spark, monkeypatch):
         .collect()
     )
     assert dstats["composite_key"] is False, dstats
-    assert dstats["dict_rank_fields"] == [0], dstats
     assert [(r["k1"], r["k2"], r["tb"]) for r in dgot] == sorted(drows)
 
 
@@ -657,7 +652,6 @@ def test_with_global_position_keyopt_gated_below_min_rows(spark, monkeypatch):
             .collect()
         )
         assert stats["composite_key"] is False, stats
-        assert stats["dict_rank_fields"] == [], stats
         assert [(r["k"], r["tb"]) for r in got] == sorted(rows)
 
 
@@ -782,11 +776,14 @@ def test_composite_key_distinct_truncation_declines(spark, monkeypatch):
     # the free wstr pre-check can prove non-injectivity
     sample_keys = [(rows[0][0], 0), (rows[1][0], 1), (rows[2][0], 2)]
     bounds = [(rows[1][0], 1)]
-    comp, rmaps = sort_ops._composite_key(
-        df, ("k", "tb"), kcols, sample_keys, bounds
+    info: dict = {}
+    comp = sort_ops._composite_key(
+        df, ("k", "tb"), kcols, sample_keys, bounds, info=info
     )
     assert comp is None
-    assert rmaps == {}  # nothing usable was collected for the premap
+    # no path packed the string: the window pre-check declined it
+    assert "wstr_packed_fields" not in info, info
+    assert info["wstr_declined"] == {0: "sample_collision"}, info
 
 
 def test_composite_key_width_boundary_exact_63_bits(spark):
@@ -801,12 +798,12 @@ def test_composite_key_width_boundary_exact_63_bits(spark):
     df63 = spark.createDataFrame(
         [(0, 0), ((1 << 31) - 2, (1 << 32) - 2)], "a long, b long"
     )
-    comp, _ = sort_ops._composite_key(df63, ("a", "b"), kcols, sample_keys, bounds)
+    comp = sort_ops._composite_key(df63, ("a", "b"), kcols, sample_keys, bounds)
     assert comp is not None
     df64 = spark.createDataFrame(
         [(0, 0), ((1 << 32) - 2, (1 << 32) - 2)], "a long, b long"
     )
-    comp2, _ = sort_ops._composite_key(df64, ("a", "b"), kcols, sample_keys, bounds)
+    comp2 = sort_ops._composite_key(df64, ("a", "b"), kcols, sample_keys, bounds)
     assert comp2 is None
 
 
@@ -845,11 +842,12 @@ def test_composite_key_distinct_exact_lim_is_not_truncation(spark):
     kcols = [F.col("k"), F.col("tb")]
     sample_keys = [(f"s{i:02d}", i) for i in range(8)]
     bounds = [("s03", 3)]
-    comp, rmaps = sort_ops._composite_key(
-        df64, ("k", "tb"), kcols, sample_keys, bounds
+    info: dict = {}
+    comp = sort_ops._composite_key(
+        df64, ("k", "tb"), kcols, sample_keys, bounds, info=info
     )
     assert comp is not None
-    assert len(rmaps[0]) == 64
+    assert info["wstr_packed_fields"] == [], info  # packed by its rank map
 
     # exactly lim (66) distinct: truncation must NOT fire; the per-field
     # cap (66 > 64) attributes the overflow, which since r12 RECLASSIFIES
@@ -859,13 +857,12 @@ def test_composite_key_distinct_exact_lim_is_not_truncation(spark):
     rows66 = [(f"s{i % 66:02d}", i) for i in range(n)]
     df66 = spark.createDataFrame(rows66, "k string, tb long")
     info2: dict = {}
-    comp2, rmaps2 = sort_ops._composite_key(
+    comp2 = sort_ops._composite_key(
         df66, ("k", "tb"), kcols, sample_keys, bounds, info=info2
     )
     assert comp2 is not None
     assert [g["idx"] for g in comp2] == [[0, 1]]
-    assert rmaps2 == {}
-    assert info2.get("wstr_packed_fields") == [0], info2
+    assert info2["wstr_packed_fields"] == [0], info2
 
 
 def test_composite_key_string_overflow_reclassifies_wstr(spark):
@@ -884,7 +881,7 @@ def test_composite_key_string_overflow_reclassifies_wstr(spark):
     bounds = [("s001", 1)]
 
     info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
+    comp = sort_ops._composite_key(
         df, ("k", "tb"), kcols, sample_keys, bounds, info=info
     )
     assert comp is not None
@@ -922,8 +919,6 @@ def test_with_global_position_timestamp_dst_driver_tz(spark, monkeypatch):
     import time
 
     if not hasattr(time, "tzset"):  # pragma: no cover - non-POSIX
-        import pytest
-
         pytest.skip("tzset unavailable")
     monkeypatch.setattr(sort_ops, "GP_SAMPLE_MOD", 2)
     monkeypatch.setattr(sort_ops, "GP_COMPOSITE_MIN_ROWS", 0)
@@ -1106,8 +1101,8 @@ def test_composite_key_fused_stats_single_job(spark):
     exact low-card string domain (former job B) and the per-field
     min/max aggregates (former job A) — must ride ONE keys-only Spark
     job, not two. Pinned via the status tracker like the ivf lazy-
-    checkpoint dial; the pack itself and the rank map must be what the
-    two-job implementation produced.
+    checkpoint dial; the pack itself, and the path that packed the
+    string field, must be what the two-job implementation produced.
 
     Also covers the exact-cardinality reclassification in the SAME
     single job: a sampled-low string whose true domain overflows
@@ -1133,16 +1128,17 @@ def test_composite_key_fused_stats_single_job(spark):
         df64 = spark.createDataFrame(rows64, "k string, tb long")
         sample_keys = [(f"s{i:02d}", i) for i in range(4)]
         bounds = [("s03", 3)]
+        info1: dict = {}
         sc.setJobGroup("gp_fused_lowcard", "fused stats job count")
         try:
-            comp, rmaps = sort_ops._composite_key(
-                df64, ("k", "tb"), kcols, sample_keys, bounds
+            comp = sort_ops._composite_key(
+                df64, ("k", "tb"), kcols, sample_keys, bounds, info=info1
             )
         finally:
             sc.setJobGroup(None, None)
         n_jobs = len(tracker.getJobIdsForGroup("gp_fused_lowcard"))
         assert comp is not None and [g["idx"] for g in comp] == [[0, 1]]
-        assert rmaps == {0: {f"s{i:02d}": i for i in range(8)}}
+        assert info1["wstr_packed_fields"] == [], info1  # rank-map pack
         assert n_jobs == 1, (
             f"fused stats pre-work must be 1 job, ran {n_jobs}"
         )
@@ -1157,7 +1153,7 @@ def test_composite_key_fused_stats_single_job(spark):
         info: dict = {}
         sc.setJobGroup("gp_fused_overflow", "fused reclassify job count")
         try:
-            comp2, rmaps2 = sort_ops._composite_key(
+            comp2 = sort_ops._composite_key(
                 df120, ("k", "tb"), kcols, sample_keys2, bounds2, info=info
             )
         finally:
@@ -1165,8 +1161,7 @@ def test_composite_key_fused_stats_single_job(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
     n_jobs2 = len(tracker.getJobIdsForGroup("gp_fused_overflow"))
-    assert comp2 is not None and info.get("wstr_packed_fields") == [0]
-    assert rmaps2 == {}
+    assert comp2 is not None and info["wstr_packed_fields"] == [0], info
     assert n_jobs2 == 1, (
         f"reclassification must reuse the fused stats job, ran {n_jobs2}"
     )
@@ -1219,3 +1214,37 @@ def test_lit_rank_map_key_types(spark):
         ).collect()
     }
     assert got == {**exotic, "zz": None}, got
+
+    # an empty map is a caller bug (both callers guard non-empty domains)
+    with pytest.raises(ValueError):
+        sort_ops._lit_rank_map({})
+
+
+def test_with_global_position_stats_do_not_add_jobs(spark, monkeypatch):
+    """Observing must not change the plan: with no sampled row there are
+    no bounds, so the exact bucket-count job is skipped whether or not
+    ``stats=`` is passed, and the count-derived stats read None."""
+    monkeypatch.setattr(sort_ops, "GP_SAMPLE_MOD", 1 << 40)
+    rows = [((i * 7) % 13, i) for i in range(200)]
+    df = spark.createDataFrame(rows, "k long, tb long")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    n_jobs = {}
+    got = {}
+    for label, stats in (("plain", None), ("stats", {})):
+        group = f"gp_stats_jobs_{label}"
+        sc.setJobGroup(group, "with_global_position job count")
+        try:
+            out = sort_ops.with_global_position(df, "k", "tb", stats=stats)
+            got[label] = out.orderBy("global_pos").select("k", "tb").collect()
+        finally:
+            sc.setJobGroup(None, None)
+        n_jobs[label] = len(tracker.getJobIdsForGroup(group))
+        if stats is not None:
+            assert stats["n_buckets"] == 1, stats
+            assert stats["total_rows"] is None, stats
+            assert stats["populated_buckets"] is None, stats
+            assert stats["max_bucket_rows"] is None, stats
+    assert n_jobs["stats"] == n_jobs["plain"], n_jobs
+    assert got["plain"] == got["stats"]
+    assert [(r["k"], r["tb"]) for r in got["plain"]] == sorted(rows)

@@ -61,7 +61,7 @@ def test_concrete_class_agg_spy_fires_through_library_code(spark):
     spy = _spy(calls)
     spy.orig = type(df).agg
     with mock.patch.object(type(df), "agg", spy):
-        comp, _ = sort_ops._composite_key(
+        comp = sort_ops._composite_key(
             df, ("a", "b", "tb"), kcols, sample_keys, bounds
         )
     assert comp is not None

@@ -223,7 +223,7 @@ def test_wide_string_trivial_injectivity_skips_countdistinct(spark):
 
     info: dict = {}
     with mock.patch.object(type(df), "agg", spy_agg):
-        comp, rmaps = sort_ops._composite_key(
+        comp = sort_ops._composite_key(
             df, ("seg", "name", "tb"), kcols, sample_keys, bounds, info=info
         )
     assert comp is not None
@@ -253,7 +253,7 @@ def test_wide_string_nul_tail_refuses_shortcut_and_declines(spark):
     bounds = [("doc_10", 10)]
 
     info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
+    comp = sort_ops._composite_key(
         df, ("name", "tb"), kcols, sample_keys, bounds, info=info
     )
     assert comp is None, info
@@ -304,7 +304,7 @@ def test_wide_string_long_tail_passes_exact_injectivity(spark):
 
     info: dict = {}
     with mock.patch.object(type(df), "agg", spy_agg):
-        comp, rmaps = sort_ops._composite_key(
+        comp = sort_ops._composite_key(
             df, ("name", "tb"), kcols, sample_keys, bounds, info=info
         )
     assert comp is not None
@@ -344,7 +344,7 @@ def test_wide_string_singleton_skips_injectivity_job(spark):
     import unittest.mock as mock
 
     with mock.patch.object(type(df), "agg", spy_agg):
-        comp, rmaps = sort_ops._composite_key(
+        comp = sort_ops._composite_key(
             df, ("s", "f", "tb"), kcols, sample_keys, bounds
         )
     flat = [s for call in calls for s in call]
@@ -377,7 +377,7 @@ def test_wide_string_adjacent_pair_realized_width_retry(spark, monkeypatch):
     bounds = [tuple(rows_wide[200]), tuple(rows_wide[500])]
 
     info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
+    comp = sort_ops._composite_key(
         df, ("a", "b", "tb"), kcols, sample_keys, bounds, info=info
     )
     assert comp is None, info
@@ -427,7 +427,7 @@ def test_failed_retry_restores_original_window_and_accounting(spark):
     bounds = [tuple(rows[200]), tuple(rows[500])]
 
     info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
+    comp = sort_ops._composite_key(
         df, ("x", "z", "tb"), kcols, sample_keys, bounds, info=info
     )
     # no pack can form: x's only budget-sharing windows collide, z's
@@ -467,7 +467,7 @@ def test_retry_skips_right_neighbor_inside_full_group(spark):
 
     info: dict = {}
     with mock.patch.object(type(df), "agg", spy_agg):
-        comp, rmaps = sort_ops._composite_key(
+        comp = sort_ops._composite_key(
             df, ("a", "b", "c"), kcols, sample_keys, bounds, info=info
         )
     assert comp is not None, info
@@ -499,7 +499,7 @@ def test_fixed_suffix_pair_packs_first_pass_without_retry(spark):
     bounds = [tuple(rows[200]), tuple(rows[500])]
 
     info: dict = {}
-    comp, rmaps = sort_ops._composite_key(
+    comp = sort_ops._composite_key(
         df, ("a", "b", "tb"), kcols, sample_keys, bounds, info=info
     )
     assert comp is not None, info
@@ -541,7 +541,7 @@ def test_regime_near_unique_leading_declines_before_exact_job(spark):
 
     info: dict = {}
     with mock.patch.object(type(df), "agg", spy_agg):
-        comp, rmaps = sort_ops._composite_key(
+        comp = sort_ops._composite_key(
             df, ("a", "b"), kcols, sample_keys, bounds, info=info,
             est_rows=20_000_000, n_buckets=8192,
         )
@@ -555,7 +555,7 @@ def test_regime_near_unique_leading_declines_before_exact_job(spark):
     # causality control: the SAME shape with the scale args omitted
     # (every pre-r15 call site) packs exactly as before
     info2: dict = {}
-    comp2, _ = sort_ops._composite_key(
+    comp2 = sort_ops._composite_key(
         df, ("a", "b"), kcols, sample_keys, bounds, info=info2
     )
     assert comp2 is not None, info2
@@ -571,7 +571,7 @@ def test_regime_near_unique_leading_declines_before_exact_job(spark):
     df3 = spark.createDataFrame(rows3, "a string, b string, id long")
     sample3 = [(r[0], r[1]) for r in rows3]
     info3: dict = {}
-    comp3, _ = sort_ops._composite_key(
+    comp3 = sort_ops._composite_key(
         df3, ("a", "b"), [F.col("a"), F.col("b")], sample3,
         [(rows3[2000][0], rows3[2000][1])], info=info3,
         est_rows=20_000_000, n_buckets=8192,
